@@ -10,7 +10,8 @@
 #                              -> bench_clobber_check.sh
 # plus the always-on gates: full Verify vs DuckDB oracles, unit specs,
 # and the structural plan assertions for the candidate-volume queries.
-set -e
+# pipefail: a failing step piped into `tail` must still fail the script.
+set -eo pipefail
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/preflight_out}
@@ -18,7 +19,7 @@ OUT=${2:-/tmp/preflight_out}
 echo "== 1/6 full Verify at $SF"
 rm -rf "$OUT"
 SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify $SF $OUT" >/dev/null 2>&1
-err=$(ls "$OUT"/*.err.txt 2>/dev/null | wc -l)
+err=$(find "$OUT" -maxdepth 1 -name "*.err.txt" | wc -l)
 if [ "$err" != "0" ]; then echo "FAIL: $err query error markers"; ls "$OUT"/*.err.txt; exit 1; fi
 
 echo "== 2/6 oracle compare"

@@ -148,10 +148,12 @@ object GraftSession {
     * (tmpfs when the redirect is active) with the tmpdir fallback —
     * the same "fast local scratch" policy, applied consistently. On a
     * real cluster this maps to keeping job-local spills on the same
-    * fast local disks as shuffle data.
+    * fast local disks as shuffle data. `spark.local.dir` may list
+    * several comma-separated directories; the first one is used.
     */
   def scratchDir(spark: SparkSession): String =
     spark.conf.getOption("spark.local.dir")
+      .flatMap(_.split(",").map(_.trim).find(_.nonEmpty))
       .getOrElse(System.getProperty("java.io.tmpdir"))
 
   /** Apply graft-required runtime confs to an externally-built session

@@ -92,8 +92,8 @@ object ZonalRehearsal {
       val shuf = shuffleRecords.get
       // exact flatMap emission count: the pre-aggregation plane,
       // recounted OUTSIDE the timed window (same deterministic rows)
-      val flatMapRows = Zonal.aggPlane(metas("nlcd").layout, gcLayers,
-        None, Seq(aoi), graft.raster.Rasterizer.DEFAULT).count()
+      val flatMapRows = Zonal.plane(metas("nlcd").layout, gcLayers,
+        None, Seq(aoi), Zonal.PolygonMask(graft.raster.Rasterizer.DEFAULT)).count()
       val nTiles = spec.layoutCols.toLong * spec.layoutRows
       // group-tuple ceiling: 14 nlcd × (8 soil + NODATA) = 126
       val bound = nTiles * 126L

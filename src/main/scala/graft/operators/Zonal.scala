@@ -1,21 +1,35 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.locationtech.jts.geom.{Geometry, MultiLineString, MultiPolygon}
+import org.locationtech.jts.geom.{Geometry, GeometryFactory, LineString, MultiLineString, MultiPolygon}
 
 import graft.geom.GeomOps
-import graft.raster.{Layout, NoData, Rasterizer}
+import graft.raster.{Extent, Layout, NoData, RasterExtent, Rasterizer}
 import graft.sources.TileCatalog.RasterMeta
 
-/** The reference's zonal-statistics operators (SURVEY §2.1 rows A–F)
-  * as Spark plans over the tiles table.
+/** The reference's zonal-statistics operators (SURVEY §2.1 rows A–G)
+  * as Spark plans over the tiles table, all built on ONE kernel,
+  * [[plane]]:
   *
-  * Shape of every plan:
   *   pruned scan(s) → full-outer align join on SpatialKey (NODATA
-  *   fill) → rasterize + TILE-LEVEL PARTIAL AGGREGATION in one flatMap
-  *   → tiny final Catalyst aggregation.
+  *   fill) → one flatMap that, per tile and per shape whose envelope
+  *   touches the tile, masks the shape's cells and PARTIALLY
+  *   AGGREGATES them by value tuple → tiny final Catalyst aggregation.
+  *
+  * A [[Mask]] decides which cells of a tile a shape covers:
+  *  - [[PolygonMask]]: `Rasterizer.foreachCellByPolygon` under the
+  *    request's `Rasterizer.Options`, after clipping the shape to the
+  *    tile (rows A–C, E, F, `RasterGroupedSum` and G's polygon ops);
+  *  - [[LineMask]]: `Rasterizer.foreachCellByLines`, whose per-(tile,
+  *    shape) BitSet visits each crossed pixel once. Pixels belong to
+  *    exactly one tile, so the per-tile counts already are the
+  *    reference's COUNT DISTINCT (row D; the reference used a
+  *    concurrent TrieMap set for the same dedup).
+  *
+  * Every operator is a projection or aggregation over that plane; a
+  * single-AOI operator is the one-shape case of its batch form.
   *
   * The flatMap emits one row per (tile, shape, value-tuple) — never
   * per pixel — so shuffle volume is O(tiles × groups), not O(pixels):
@@ -27,6 +41,8 @@ import graft.sources.TileCatalog.RasterMeta
   *
   * NODATA semantics (SURVEY §2.3):
   *  - group values: NODATA (Int.MinValue) groups as itself;
+  *  - no group layers: every pixel keys on `List(0)` (reference
+  *    Geoprocessing.scala:275);
   *  - average target: NODATA contributes 0.0 but still counts
   *    (reference Geoprocessing.scala:266-270, 313-319);
   *  - summary min/max skip NODATA (as NULL — documented divergence
@@ -50,10 +66,12 @@ object Zonal {
     /** Envelope rejection: true when this shape's bbox cannot touch the
       * extent — four double compares, no JTS, no WKB deserialization.
       * Non-strict (shared edges count as intersecting) so boundary
-      * cells are never wrongly skipped; an empty geometry's inverted
-      * envelope is disjoint from everything, matching its empty mask.
+      * cells are never wrongly skipped. Both masks cover only cells
+      * inside the shape's closed bbox (the line walk rejects every
+      * segment whose closed bbox misses the tile), so a skipped pair
+      * always masked zero cells.
       */
-    def disjointFrom(e: graft.raster.Extent): Boolean =
+    def disjointFrom(e: Extent): Boolean =
       exmin > e.xmax || exmax < e.xmin || eymin > e.ymax || eymax < e.ymin
   }
 
@@ -139,91 +157,107 @@ object Zonal {
     StructField("mn", DoubleType, nullable = true),
     StructField("mx", DoubleType, nullable = true)))
 
-  /** Pre-clip the AOI to the tile extent: bounds the scanline to the
-    * tile and keeps per-tile cost proportional to local geometry
-    * complexity (center-sampling is invariant under this clip).
-    * Skipped for PixelIsArea/includePartial=false where artificial
-    * clip edges would wrongly erode interior cells.
+  /** Which cells of a tile a shape covers; shipped inside the kernel's
+    * closure, so it must serialize.
     */
-  private def clipToTile(g: Geometry, re: graft.raster.RasterExtent): Geometry =
-    if (g.getNumGeometries > 0) {
-      val env = g.getFactory.toGeometry(re.extent.toEnvelope)
-      try g.intersection(env) catch { case _: Exception => g }
-    } else g
+  private[graft] sealed trait Mask extends Serializable {
+    def foreachCell(g: Geometry, re: RasterExtent)(f: (Int, Int) => Unit): Unit
+  }
 
-  /** The partially-aggregated masked plane: per (tile, shape,
-    * value-tuple) one row `(shape_id, vals, cnt, sum, mn, mx)` where
-    * sum/mn/mx aggregate the (optional) target under the NODATA rules.
+  /** Polygon coverage under `opts`. The shape is pre-clipped to the
+    * tile extent: that bounds the scanline to the tile and keeps
+    * per-tile cost proportional to local geometry complexity
+    * (center-sampling is invariant under this clip). Not clipped for
+    * PixelIsArea/includePartial=false, where artificial clip edges
+    * would wrongly erode interior cells.
     */
-  private[graft] def aggPlane(layout: Layout, groupLayers: Seq[Layer], target: Option[Layer],
-                              aois: Seq[MultiPolygon], opts: Rasterizer.Options): DataFrame = {
+  private[graft] final case class PolygonMask(opts: Rasterizer.Options) extends Mask {
+    def foreachCell(g: Geometry, re: RasterExtent)(f: (Int, Int) => Unit): Unit = {
+      val clipped =
+        if ((opts.pixelIsArea && !opts.includePartial) || g.getNumGeometries == 0) g
+        else try g.intersection(g.getFactory.toGeometry(re.extent.toEnvelope))
+        catch { case _: Exception => g }
+      Rasterizer.foreachCellByPolygon(clipped, re, opts)(f)
+    }
+  }
+
+  /** Line coverage: every cell a segment passes through, once each. */
+  private[graft] case object LineMask extends Mask {
+    def foreachCell(g: Geometry, re: RasterExtent)(f: (Int, Int) => Unit): Unit =
+      Rasterizer.foreachCellByLines(g, re)(f)
+  }
+
+  /** THE zonal kernel — the partially-aggregated masked plane: per
+    * (tile, shape, value-tuple) one row `(shape_id, vals, cnt, sum, mn,
+    * mx)` where sum/mn/mx aggregate the (optional) target under the
+    * NODATA rules and `shape_id` indexes `shapes`.
+    */
+  private[graft] def plane(layout: Layout, groupLayers: Seq[Layer], target: Option[Layer],
+                           shapes: Seq[Geometry], mask: Mask): DataFrame = {
     val joined = joinLayers(groupLayers ++ target.toSeq)
     val n = groupLayers.size
     val hasTarget = target.isDefined
-    val shapes = aois.map(bgeom)
+    val bgs = shapes.map(bgeom)
     val lay = layout
-    val o = opts
     val tileCols = layout.tileCols
     joined.flatMap { row =>
-      val keyCol = row.getInt(0)
-      val keyRow = row.getInt(1)
-      val re = lay.rasterExtent(keyCol, keyRow)
+      val re = lay.rasterExtent(row.getInt(0), row.getInt(1))
       val groups: Array[Array[Int]] = Array.tabulate(n)(i => decodeIntTile(row, 2 + i))
       val tgt: Array[Double] = if (hasTarget) decodeDoubleTile(row, 2 + n) else null
       val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-      shapes.zipWithIndex.foreach { case (bg, si) =>
+      bgs.zipWithIndex.foreach { case (bg, si) =>
         // envelope fast-path: a shape whose bbox misses this tile's
-        // extent masks zero cells here — skip the JTS clip + scanline
-        // entirely. At 10⁴-shape batches this turns the per-tile cost
-        // from O(shapes) JTS intersections into O(shapes) double
+        // extent masks zero cells here — skip the mask entirely. At
+        // 10⁴-shape batches this turns the per-tile cost from
+        // O(shapes) JTS clips or line walks into O(shapes) double
         // compares plus work only for genuinely overlapping pairs.
         if (bg.disjointFrom(re.extent)) Zonal.envSkips.incrementAndGet()
         else {
-        val accum = scala.collection.mutable.HashMap.empty[ValsKey, Agg]
-        val clipped =
-          if (o.pixelIsArea && !o.includePartial) bg.geom else clipToTile(bg.geom, re)
-        Rasterizer.foreachCellByPolygon(clipped, re, o) { (c, r) =>
-          val vals = new Array[Int](n)
-          var i = 0
-          while (i < n) {
-            vals(i) = if (groups(i) == null) NoData.INT else groups(i)(r * tileCols + c)
-            i += 1
+          val accum = scala.collection.mutable.HashMap.empty[ValsKey, Agg]
+          mask.foreachCell(bg.geom, re) { (c, r) =>
+            val vals = new Array[Int](n)
+            var i = 0
+            while (i < n) {
+              vals(i) = if (groups(i) == null) NoData.INT else groups(i)(r * tileCols + c)
+              i += 1
+            }
+            val tv =
+              if (!hasTarget) 0.0
+              else if (tgt == null) Double.NaN
+              else tgt(r * tileCols + c)
+            accum.getOrElseUpdate(new ValsKey(vals), new Agg).add(tv)
           }
-          val tv =
-            if (!hasTarget) 0.0
-            else if (tgt == null) Double.NaN
-            else tgt(r * tileCols + c)
-          accum.getOrElseUpdate(new ValsKey(vals), new Agg).add(tv)
-        }
-        accum.foreach { case (k, a) =>
-          out += Row(si, k.a.toSeq, a.cnt, a.sum,
-            if (a.mn.isNaN) null else a.mn, if (a.mx.isNaN) null else a.mx)
-        }
+          accum.foreach { case (k, a) =>
+            out += Row(si, if (n == 0) Seq(0) else k.a.toSeq, a.cnt, a.sum,
+              if (a.mn.isNaN) null else a.mn, if (a.mx.isNaN) null else a.mx)
+          }
         }
       }
       out
     }(Encoders.row(planeSchema)).toDF()
   }
 
+  /** Final aggregation of a plane per (shape, value tuple). */
+  private def perShape(plane: DataFrame, agg: Column): DataFrame =
+    plane.groupBy(col("shape_id"), col("vals")).agg(agg)
+
   /** Row A — `rasterGroupedCount` (Geoprocessing.scala:338-368):
     * COUNT(*) of masked pixels per distinct value tuple.
     */
   def groupedCount(spark: SparkSession, layout: Layout, layers: Seq[Layer],
                    aoi: MultiPolygon, opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    aggPlane(layout, layers, None, Seq(aoi), opts)
-      .groupBy(col("vals")).agg(sum(col("cnt")).as("cnt"))
+    groupedCountMany(spark, layout, layers, Seq(aoi), opts).select(col("vals"), col("cnt"))
 
   /** Row F — `getRasterGroupedCountMany` (Geoprocessing.scala:114-126):
-    * grouped count per input polygon; every shape rasterizes against
-    * each tile in ONE flatMap pass (shape_id column instead of
-    * per-shape rescans — the reference fetches layers once for the
-    * union AOI, Geoprocessing.scala:116-120).
+    * grouped count per input polygon; every shape masks each tile in
+    * ONE flatMap pass (shape_id column instead of per-shape rescans —
+    * the reference fetches layers once for the union AOI,
+    * Geoprocessing.scala:116-120).
     */
   def groupedCountMany(spark: SparkSession, layout: Layout, layers: Seq[Layer],
                        aois: Seq[MultiPolygon],
                        opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    aggPlane(layout, layers, None, aois, opts)
-      .groupBy(col("shape_id"), col("vals")).agg(sum(col("cnt")).as("cnt"))
+    perShape(plane(layout, layers, None, aois, PolygonMask(opts)), sum(col("cnt")).as("cnt"))
 
   /** Rows B/C — `rasterAverage` / `rasterGroupedAverage`
     * (Geoprocessing.scala:245-277, 288-329): mean of target per value
@@ -233,28 +267,22 @@ object Zonal {
   def groupedAverage(spark: SparkSession, layout: Layout, groupLayers: Seq[Layer],
                      target: Layer, aoi: MultiPolygon,
                      opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    keyed(aggPlane(layout, groupLayers, Some(target), Seq(aoi), opts), groupLayers)
-      .groupBy(col("vals"))
-      .agg((sum(col("sum")) / sum(col("cnt"))).as("avg_v"))
+    groupedAverageMany(spark, layout, groupLayers, target, Seq(aoi), opts)
+      .select(col("vals"), col("avg_v"))
 
   /** Grouped average per shape in one pass (the /multi batch kernel). */
   def groupedAverageMany(spark: SparkSession, layout: Layout, groupLayers: Seq[Layer],
                          target: Layer, aois: Seq[MultiPolygon],
                          opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    keyed(aggPlane(layout, groupLayers, Some(target), aois, opts), groupLayers)
-      .groupBy(col("shape_id"), col("vals"))
-      .agg((sum(col("sum")) / sum(col("cnt"))).as("avg_v"))
+    perShape(plane(layout, groupLayers, Some(target), aois, PolygonMask(opts)),
+      (sum(col("sum")) / sum(col("cnt"))).as("avg_v"))
 
   /** CHANGELOG-era `RasterGroupedSum` (reference CHANGELOG.md:151-153). */
   def groupedSum(spark: SparkSession, layout: Layout, groupLayers: Seq[Layer],
                  target: Layer, aoi: MultiPolygon,
                  opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    keyed(aggPlane(layout, groupLayers, Some(target), Seq(aoi), opts), groupLayers)
-      .groupBy(col("vals")).agg(sum(col("sum")).as("sum_v"))
-
-  /** Ungrouped ops key on `List(0)` (reference Geoprocessing.scala:275). */
-  private def keyed(plane: DataFrame, groupLayers: Seq[Layer]): DataFrame =
-    if (groupLayers.nonEmpty) plane else plane.withColumn("vals", array(lit(0)))
+    perShape(plane(layout, groupLayers, Some(target), Seq(aoi), PolygonMask(opts)),
+      sum(col("sum")).as("sum_v")).select(col("vals"), col("sum_v"))
 
   /** Row E — `rasterSummary` (Geoprocessing.scala:380-431): per input
     * raster (order preserved), min/avg/max over masked pixels; min/max
@@ -264,7 +292,7 @@ object Zonal {
               aoi: MultiPolygon,
               opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
     layers.zipWithIndex.map { case (l, i) =>
-      aggPlane(layout, Nil, Some(l), Seq(aoi), opts)
+      plane(layout, Nil, Some(l), Seq(aoi), PolygonMask(opts))
         .agg(
           min(col("mn")).as("min_v"),
           max(col("mx")).as("max_v"),
@@ -274,11 +302,8 @@ object Zonal {
     }.reduce(_.unionByName(_)).orderBy("idx")
 
   /** Row D — `rasterLinesJoin` (Geoprocessing.scala:210-235): count
-    * DISTINCT pixels touched by ≥1 line, grouped by value tuple.
-    * The rasterizer's per-(tile,shape) BitSet already dedups pixels
-    * and pixels belong to exactly one tile, so counts partial-aggregate
-    * per tile with no global distinct (the reference used a concurrent
-    * TrieMap set for the same dedup).
+    * DISTINCT pixels touched by ≥1 line, grouped by value tuple — the
+    * line mask's per-tile dedup needs no global distinct.
     */
   def linesJoin(spark: SparkSession, layout: Layout, layers: Seq[Layer],
                 lines: Seq[MultiLineString]): DataFrame =
@@ -286,42 +311,17 @@ object Zonal {
       .select(col("vals"), col("cnt"))
 
   /** Lines join for many shapes in ONE pass (the 61-shape reference
-    * batch becomes one scan).
+    * batch becomes one scan); each shape's lines merge into one
+    * multi-line so a pixel crossed by several counts once.
     */
   def linesJoinMany(spark: SparkSession, layout: Layout, layers: Seq[Layer],
                     linesPerShape: Seq[Seq[MultiLineString]]): DataFrame = {
-    val joined = joinLayers(layers)
-    val n = layers.size
-    val gf = new org.locationtech.jts.geom.GeometryFactory()
-    val perShape: Seq[BGeom] = linesPerShape.map { ls =>
-      val all = ls.flatMap(ml => (0 until ml.getNumGeometries).map(ml.getGeometryN(_)
-        .asInstanceOf[org.locationtech.jts.geom.LineString]))
-      bgeom(gf.createMultiLineString(all.toArray))
+    val gf = new GeometryFactory()
+    val shapes = linesPerShape.map { ls =>
+      gf.createMultiLineString((for (ml <- ls; i <- 0 until ml.getNumGeometries)
+        yield ml.getGeometryN(i).asInstanceOf[LineString]).toArray)
     }
-    val lay = layout
-    val tileCols = layout.tileCols
-    joined.flatMap { row =>
-      val keyCol = row.getInt(0)
-      val keyRow = row.getInt(1)
-      val re = lay.rasterExtent(keyCol, keyRow)
-      val groups: Array[Array[Int]] = Array.tabulate(n)(i => decodeIntTile(row, 2 + i))
-      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-      perShape.zipWithIndex.foreach { case (bg, si) =>
-        val accum = scala.collection.mutable.HashMap.empty[ValsKey, Agg]
-        Rasterizer.foreachCellByLines(bg.geom, re) { (c, r) =>
-          val vals = new Array[Int](n)
-          var i = 0
-          while (i < n) {
-            vals(i) = if (groups(i) == null) NoData.INT else groups(i)(r * tileCols + c)
-            i += 1
-          }
-          accum.getOrElseUpdate(new ValsKey(vals), new Agg).add(0.0)
-        }
-        accum.foreach { case (k, a) => out += Row(si, k.a.toSeq, a.cnt, 0.0, null, null) }
-      }
-      out
-    }(Encoders.row(planeSchema)).toDF()
-      .groupBy(col("shape_id"), col("vals")).agg(sum(col("cnt")).as("cnt"))
+    perShape(plane(layout, layers, None, shapes, LineMask), sum(col("cnt")).as("cnt"))
   }
 
   /** Batch op spec for [[multiBatch]]. */
@@ -343,22 +343,19 @@ object Zonal {
                  lines: Seq[MultiLineString],
                  ops: Seq[BatchOp]): DataFrame = {
     val keyExpr = expr("concat('List(', array_join(transform(vals, v -> cast(v as string)), ', '), ')')")
-    val frames = ops.map {
+    def tagged(df: DataFrame, label: String, v: String): DataFrame =
+      df.select(col("shape_id"), lit(label).as("op_label"), keyExpr.as("k"),
+        col(v).cast("double").as("v"))
+    ops.map {
       case BatchCount(label, rasters, o) =>
-        groupedCountMany(spark, layout, rasters.map(shared), aois, o)
-          .select(col("shape_id"), lit(label).as("op_label"), keyExpr.as("k"),
-            col("cnt").cast("double").as("v"))
+        tagged(groupedCountMany(spark, layout, rasters.map(shared), aois, o), label, "cnt")
       case BatchAverage(label, rasters, target, o) =>
-        groupedAverageMany(spark, layout, rasters.map(shared), shared(target), aois, o)
-          .select(col("shape_id"), lit(label).as("op_label"), keyExpr.as("k"),
-            col("avg_v").as("v"))
+        tagged(groupedAverageMany(spark, layout, rasters.map(shared), shared(target), aois, o),
+          label, "avg_v")
       case BatchLines(label, rasters) =>
-        val clippedPerShape = aois.map(shape => GeomOps.clipLines(lines, shape))
-        linesJoinMany(spark, layout, rasters.map(shared), clippedPerShape)
-          .select(col("shape_id"), lit(label).as("op_label"), keyExpr.as("k"),
-            col("cnt").cast("double").as("v"))
-    }
-    frames.reduce(_.unionByName(_))
+        tagged(linesJoinMany(spark, layout, rasters.map(shared),
+          aois.map(GeomOps.clipLines(lines, _))), label, "cnt")
+    }.reduce(_.unionByName(_))
   }
 }
 

@@ -43,56 +43,50 @@ object Rasterizer {
                           (f: (Int, Int) => Unit): Unit = {
     val polys = polygonsOf(geom)
     if (polys.isEmpty) return
-    if (!opts.pixelIsArea) {
-      scanlineCenters(polys, re)(f)
-    } else {
-      val seen = new java.util.BitSet(re.cols * re.rows)
-      val mark = (c: Int, r: Int) =>
-        if (c >= 0 && c < re.cols && r >= 0 && r < re.rows) seen.set(r * re.cols + c)
-      // interior cells (center inside) …
-      scanlineCenters(polys, re)(mark)
-      if (opts.includePartial) {
-        // … plus every cell the boundary passes through
-        polys.foreach { p =>
-          ringsOf(p).foreach(ring => foreachCellByLineSegs(ring.getCoordinates, re)(mark))
-        }
-      } else {
-        // fully-inside only: drop center-inside cells whose area
-        // crosses the boundary
-        val boundary = new java.util.BitSet(re.cols * re.rows)
-        val markB = (c: Int, r: Int) =>
-          if (c >= 0 && c < re.cols && r >= 0 && r < re.rows) boundary.set(r * re.cols + c)
-        polys.foreach { p =>
-          ringsOf(p).foreach(ring => foreachCellByLineSegs(ring.getCoordinates, re)(markB))
-        }
-        seen.andNot(boundary)
-      }
-      var i = seen.nextSetBit(0)
-      while (i >= 0) {
-        f(i % re.cols, i / re.cols)
-        i = seen.nextSetBit(i + 1)
-      }
-      return
-    }
+    // every cell the boundary passes through
+    val boundary = (mark: Mark) => polys.flatMap(ringsOf)
+      .foreach(ring => foreachCellByLineSegs(ring.getCoordinates, re)(mark))
+    if (!opts.pixelIsArea) scanlineCenters(polys, re)(f)
+    else if (opts.includePartial)
+      // interior cells (center inside) plus the boundary cells
+      fillThenVisit(re, mark => { scanlineCenters(polys, re)(mark); boundary(mark) })(f)
+    else
+      // fully-inside only: center-inside cells minus those whose area
+      // crosses the boundary
+      fillThenVisit(re, scanlineCenters(polys, re), Some(boundary))(f)
   }
 
   /** Visit every cell crossed by the line(s): supercover grid
     * traversal, so a pixel is visited when the segment passes through
     * its area (each pixel at most once per call).
     */
-  def foreachCellByLines(geom: Geometry, re: RasterExtent)(f: (Int, Int) => Unit): Unit = {
-    val seen = new java.util.BitSet(re.cols * re.rows)
-    val mark = (c: Int, r: Int) =>
-      if (c >= 0 && c < re.cols && r >= 0 && r < re.rows) seen.set(r * re.cols + c)
-    linesOf(geom).foreach(l => foreachCellByLineSegs(l.getCoordinates, re)(mark))
+  def foreachCellByLines(geom: Geometry, re: RasterExtent)(f: (Int, Int) => Unit): Unit =
+    fillThenVisit(re, mark =>
+      linesOf(geom).foreach(l => foreachCellByLineSegs(l.getCoordinates, re)(mark)))(f)
+
+  // ---- internals ----
+
+  private type Mark = (Int, Int) => Unit
+
+  /** The one BitSet path: `fill` marks cells, `drop` (if given) marks
+    * cells to subtract, marks outside `re` are ignored; every surviving
+    * cell is then visited once, in row-major order.
+    */
+  private def fillThenVisit(re: RasterExtent, fill: Mark => Unit,
+                            drop: Option[Mark => Unit] = None)(f: Mark): Unit = {
+    def marked(paint: Mark => Unit): java.util.BitSet = {
+      val bits = new java.util.BitSet(re.cols * re.rows)
+      paint((c, r) => if (c >= 0 && c < re.cols && r >= 0 && r < re.rows) bits.set(r * re.cols + c))
+      bits
+    }
+    val seen = marked(fill)
+    drop.foreach(d => seen.andNot(marked(d)))
     var i = seen.nextSetBit(0)
     while (i >= 0) {
       f(i % re.cols, i / re.cols)
       i = seen.nextSetBit(i + 1)
     }
   }
-
-  // ---- internals ----
 
   private def polygonsOf(g: Geometry): Seq[Polygon] = g match {
     case p: Polygon => if (p.isEmpty) Nil else Seq(p)

@@ -50,6 +50,17 @@ class TablesSpec extends SparkSpec {
       s"l_shipdate encoding drifted: ${li.schema("l_shipdate").dataType}")
   }
 
+  test("scratchDir takes the first entry of a comma-separated spark.local.dir") {
+    // a private session: spark.local.dir is a core conf, settable on a
+    // live session only with the legacy core-conf guard lifted
+    val s = spark.newSession()
+    s.conf.set("spark.sql.legacy.setCommandRejectsSparkCoreConfs", "false")
+    s.conf.set("spark.local.dir", "/scratch/a, /scratch/b")
+    assert(GraftSession.scratchDir(s) == "/scratch/a")
+    s.conf.set("spark.local.dir", "/scratch/only")
+    assert(GraftSession.scratchDir(s) == "/scratch/only")
+  }
+
   test("events loader still accepts the legacy nanos-as-long encoding") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_events_legacy").toString

@@ -210,23 +210,37 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
   test("envelope fast-path rejects disjoint (tile, shape) pairs without JTS") {
     // 12 single-cell shapes, each interior to exactly one of the 4
     // tiles ⇒ 12 × 3 = 36 (tile, shape) pairs must take the envelope
-    // rejection, and each shape still masks exactly its one cell
+    // rejection, and each shape still masks exactly its one cell —
+    // for polygons and for lines alike (one kernel, two masks)
     val cells = Seq((0, 0), (3, 1), (5, 2), (7, 3), (1, 5), (6, 6),
       (2, 3), (4, 4), (7, 7), (0, 7), (5, 0), (3, 6))
-    val shapes = cells.map { case (gc, gr) =>
+    val polygons = cells.map { case (gc, gr) =>
       square(gc + 0.1, gr + 0.1, gc + 0.9, gr + 0.9)
     }
-    val before = Zonal.envSkips.get()
-    val df = Zonal.groupedCountMany(spark, layout, Seq(layer("ca")), shapes)
-    val rows = df.collect().map(r =>
-      (r.getInt(0), r.getSeq[Int](1).head) -> r.getLong(2)).toMap
-    assert(Zonal.envSkips.get() - before == 36)
-    // ca = gc (no picked cell hits the (2,2) NODATA hole): shape i
-    // masks one cell of value gc
-    cells.zipWithIndex.foreach { case ((gc, _), si) =>
-      assert(rows((si, gc)) == 1L, s"shape $si")
+    val lines = cells.map { case (gc, gr) =>
+      Seq(gf.createMultiLineString(Array(gf.createLineString(Array(
+        new Coordinate(gc + 0.2, gr + 0.5), new Coordinate(gc + 0.8, gr + 0.5))))))
     }
-    assert(rows.values.sum == cells.size)
+    def skipsAndRows(run: => org.apache.spark.sql.DataFrame) = {
+      val before = Zonal.envSkips.get()
+      val rows = run.collect().map(r =>
+        (r.getInt(0), r.getSeq[Int](1).head) -> r.getLong(2)).toMap
+      (Zonal.envSkips.get() - before, rows)
+    }
+    Seq(
+      "polygons" -> skipsAndRows(
+        Zonal.groupedCountMany(spark, layout, Seq(layer("ca")), polygons)),
+      "lines" -> skipsAndRows(
+        Zonal.linesJoinMany(spark, layout, Seq(layer("ca")), lines))
+    ).foreach { case (kind, (skips, rows)) =>
+      assert(skips == 36, kind)
+      // ca = gc (no picked cell hits the (2,2) NODATA hole): shape i
+      // masks one cell of value gc
+      cells.zipWithIndex.foreach { case ((gc, _), si) =>
+        assert(rows((si, gc)) == 1L, s"$kind shape $si")
+      }
+      assert(rows.values.sum == cells.size, kind)
+    }
   }
 
   test("pixelIsArea widens the mask (reference pixelIsArea=true rasters)") {
