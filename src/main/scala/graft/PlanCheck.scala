@@ -10,65 +10,6 @@ import org.apache.spark.sql.execution.FormattedMode
   */
 object PlanCheck {
 
-  /** Queries whose CONSTRUCTION already runs Spark jobs (q72 executes
-    * a full streaming query into a memory sink, q73 trains k-means
-    * with a collect loop, q50 localCheckpoints both aggregation
-    * branches) — their printed "plan" is mostly a scan of
-    * already-materialized state, so explaining them by default costs
-    * tens of seconds for no signal. Still explainable by name.
-    */
-  private val eagerConstruction =
-    Set("q50_sketches", "q72_stream_sessionize", "q73_ann_recall",
-      "q79_stream_window", "q80_bloom_screen", "q81_pq_recall",
-      "q87_stream_join", "q94_stream_dedup", "q95_pagerank",
-      "q103_ivfpq_recall",
-      // q106 runs the gate-condition counts, q110/q115's Prefix
-      // collects range-partition offsets, q113 localCheckpoints the
-      // sketch
-      "q106_heavy_hitters", "q110_skyline", "q113_count_min",
-      "q115_equidepth_hist",
-      // q117's pointer-doubling rounds run during construction;
-      // q125 runs a full MemoryStream query
-      "q117_hierarchy", "q125_stream_incremental",
-      // q127 draws + collects the sample twice during construction
-      "q127_weighted_sample",
-      // q51 counts the edge list (and collects it under the union-find
-      // threshold); q128 runs the distributed propagate rounds; q99
-      // builds the Bloom filter eagerly (df.stat.bloomFilter is a job)
-      "q51_dedup_groups", "q99_bloom_join", "q128_cc_distributed",
-      // q129 builds 4 bloom filters + runs the FN/FP counts eagerly
-      "q129_bloom_shards",
-      // q133 localCheckpoints the decoded image hashes
-      "q133_image_neardup",
-      // q134 runs a full MemoryStream left-outer-join query
-      "q134_stream_left_join",
-      // q192 runs a full MemoryStream stateful query; q200–q202 write
-      // the formats fixture on first construction
-      "q192_stream_cusum", "q200_schema_merge", "q201_partitioned_scan",
-      "q202_jsonl_source",
-      // round-7 gates with eager construction: q339/q350/q352 write
-      // their roundtrip fixture on construction, q341/q353 run
-      // localCheckpoint iteration rounds, q349 executes a full
-      // MemoryStream query
-      "q339_csv_multiline", "q341_hits", "q349_stream_semi_join",
-      "q350_ntz_roundtrip", "q352_json_corrupt", "q353_kcenter_coreset",
-      // q398/q400/q403/q404/q405/q406/q411 localCheckpoint partials
-      // during construction; q402's peel rounds run eagerly; q407's
-      // Prefix collects range-partition offsets
-      "q398_assoc_rules", "q400_bpe_merges", "q402_ktruss", "q403_bh_fdr",
-      "q404_jackknife", "q405_permutation_test", "q406_isotonic_fit",
-      "q407_heaps_curve", "q411_mantel_haenszel",
-      // q454 runs its 4 star rounds eagerly (checkpoint + count each)
-      "q454_cc_star_census",
-      // round-10: q431/q434 now ride Prefix.withPrefixSums, whose
-      // offset pass collects during construction; q455's semDedup
-      // localCheckpoints its quantized vectors and members
-      "q431_jonckheere", "q434_gini_split", "q455_semdedup",
-    // round-11: q457's minhashMergeDelta localCheckpoints the delta
-    // bucket table during construction; q458's two semDedupMembers
-    // planes checkpoint likewise
-    "q457_incremental_dedup", "q458_semdedup_delta")
-
   /** Plan assertions for the candidate-volume queries (round-6 judge
     * item 6): the scale-safety claims — "candidates via equi-join,
     * never a cartesian" — checked structurally against the physical
@@ -517,9 +458,12 @@ object PlanCheck {
       if (failed > 0) sys.exit(1)
       return
     }
+    // eager gates already run jobs while the DataFrame is built, so
+    // their printed plan is mostly a scan of materialized state; they
+    // are skipped by default and still explainable by name
     val names =
       if (args.nonEmpty) args.toSeq
-      else SparkEntry.queries.keys.toSeq.sorted.filterNot(eagerConstruction)
+      else SparkEntry.queries.keys.toSeq.sorted.filterNot(SparkEntry.eagerGates)
     names.foreach { name =>
       println(s"===== $name")
       println(SparkEntry.queries(name)(spark, dir)

@@ -124,11 +124,7 @@ object Service {
   private def crs(name: Option[String], default: Projections.Crs): Projections.Crs =
     name.map(Projections.byName).getOrElse(default)
 
-  private def aoiOf(in: InputData): MultiPolygon = {
-    val from = crs(in.polygonCRS, Projections.LatLng)
-    val to = crs(in.rasterCRS, Projections.ConusAlbers)
-    GeomOps.unionAll(in.polygon.getOrElse(Nil).map(GeomOps.toAoi(_, from, to)))
-  }
+  private def aoiOf(in: InputData): MultiPolygon = GeomOps.unionAll(aoisOf(in))
 
   private def aoisOf(in: InputData): Seq[MultiPolygon] = {
     val from = crs(in.polygonCRS, Projections.LatLng)

@@ -29,10 +29,11 @@ import org.apache.spark.sql.types._
   * `row_number over (order by score desc, doc_id) = 1` loop it fuses
   * (spec-pinned in Round15Spec against the verbatim loop). Null edges
   * mirror the loop's SQL: a null rel/sim yields a null score term that
-  * sorts AFTER every non-null score (desc ordering, nulls last) and a
-  * null sim is ignored by max. Null doc ids would make the loop's
-  * anti-join non-terminating in spirit — the kernel fails loudly
-  * instead of silently diverging.
+  * sorts AFTER every non-null score (desc ordering, nulls last), a
+  * null sim is ignored by max, and a score that overflows a long
+  * throws `ArithmeticException` as the loop's ANSI arithmetic does.
+  * Null doc ids would make the loop's anti-join non-terminating in
+  * spirit — the kernel fails loudly instead of silently diverging.
   */
 case class MmrPick(left: Expression, right: Expression)
   extends BinaryExpression with CodegenFallback {
@@ -137,10 +138,13 @@ case class MmrPick(left: Expression, right: Expression)
             // coalesce(maxsim, 0): not-found ⇒ 0, exactly the loop
             if (!found) maxsim = 0L
           }
+          // exact arithmetic: the loop form's ANSI long ops throw
+          // ARITHMETIC_OVERFLOW rather than wrap
           val score: java.lang.Long =
             if (rel(i) == null) null
-            else if (k == 0) rel(i) * wRel
-            else wRel * rel(i) - wSim * maxsim
+            else if (k == 0) Math.multiplyExact(rel(i).longValue, wRel)
+            else Math.subtractExact(Math.multiplyExact(wRel, rel(i).longValue),
+              Math.multiplyExact(wSim, maxsim))
           // argmax by (score DESC NULLS LAST, doc ASC) — row_number's
           // order in the loop form
           val better =

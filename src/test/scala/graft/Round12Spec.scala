@@ -4,18 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 /** Round-12 pins: the TrainedPlane memo contract (judge item 7), the
-  * shared triangle-support plane's equivalences (judge item 2), the
-  * stream-gate band registry (judge item 4), and the fixture cache
-  * fingerprint (advisor item).
+  * shared triangle-support plane's equivalences (judge item 2), and
+  * the fixture cache fingerprint (advisor item).
   */
 class Round12Spec extends AnyFunSuite with SparkSpec {
-
-  test("streamGates registry: every banded stream gate is a real query") {
-    val qs = SparkEntry.queries.keySet
-    val missing = SparkEntry.streamGates.filterNot(qs.contains)
-    assert(missing.isEmpty, s"streamGates not in queries: $missing")
-    assert(SparkEntry.streamGates.distinct.size == SparkEntry.streamGates.size)
-  }
 
   test("TrainedPlane memo contract: build once, rebuild after clear, failures retryable") {
     import spark.implicits._

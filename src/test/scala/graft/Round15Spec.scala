@@ -269,4 +269,20 @@ class Round15Spec extends AnyFunSuite with SparkSpec {
     assert(rb.count(_.head == 1L) == 1)
     assert(rb.filter(_.head == 2L).map(_(2)) == Seq(1L, 3L, 9L, 15L, 27L))
   }
+
+  test("fused MMR: score overflow fails like the ANSI loop, never wraps") {
+    import spark.implicits._
+    // 7 · 2^61 overflows a long: the loop's ANSI `rel * 7` throws
+    val cand = Seq((1L, 1L, 1L << 61), (1L, 2L, 5L))
+      .toDF("query_id", "doc_id", "rel")
+    val psim0 = Seq((1L, 1L, 2L, 0L)).toDF("query_id", "da", "db", "sim")
+    def causes(t: Throwable) = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+    for ((form, run) <- Seq[(String, () => Any)](
+        "loop" -> (() => mmrLoop(cand, psim0).collect()),
+        "fused" -> (() => mmrFused(cand, psim0).collect()))) {
+      val e = intercept[Throwable](run())
+      assert(causes(e).exists(_.isInstanceOf[ArithmeticException]),
+        s"$form: expected an ArithmeticException in the cause chain, got $e")
+    }
+  }
 }
