@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1 scale rehearsal for the REFERENCE surface (judge r7 item 8):
-  * the zonal engine at 1×/3×/10× of the sf0.1 fixture's pixel count,
-  * same rigor as [[ScaleRehearsal]] gives the pipeline side.
+  * the zonal engine at 1×/3×/10× of the sf0.1 fixture's pixel count.
   *
   * Layouts hold the 512² tile size (the reference's layout —
   * BASELINE.md) and grow the GRID, exactly how a larger AOI grows the

@@ -66,24 +66,20 @@ object ExactPercentiles {
   /** Default per-group row bound above which the window path's
     * one-task-per-group sort is refused: 32 Mi rows ≈ a few GB of
     * sort buffer in one task — near the practical ceiling. Override
-    * per call (`maxGroupRows`) or per session
-    * (`spark.graft.percentiles.maxGroupRows`).
+    * per call (`maxGroupRows`).
     */
   val DefaultMaxGroupRows: Long = 32L * 1024 * 1024
 
   /** Percentiles `ps` (output column name → p in [0,1]) of `valueCol`
     * per group of `groupCols`. One output row per group.
     *
-    * `maxGroupRows` > 0 overrides the session/default hot-group bound
+    * `maxGroupRows` > 0 overrides the default hot-group bound
     * (tests force the ranged path with 1, the window path with
     * Long.MaxValue).
     */
   def exact(df: DataFrame, groupCols: Seq[String], valueCol: String,
             ps: Seq[(String, Double)], maxGroupRows: Long = 0): DataFrame = {
-    val bound =
-      if (maxGroupRows > 0) maxGroupRows
-      else df.sparkSession.conf.getOption("spark.graft.percentiles.maxGroupRows")
-        .map(_.toLong).getOrElse(DefaultMaxGroupRows)
+    val bound = if (maxGroupRows > 0) maxGroupRows else DefaultMaxGroupRows
     val gcols = groupCols.map(col)
     lastBoundaryTL.set(-1L) // ranged path overwrites with its realized count
     // plan-time shortcut: rowCount when the optimizer knows it, else a
@@ -92,7 +88,7 @@ object ExactPercentiles {
     val stats = df.queryExecution.optimizedPlan.stats
     val provablySmall = stats.rowCount match {
       case Some(rc) => rc <= BigInt(bound)
-      // BigInt: bound is caller/session-supplied and may be
+      // BigInt: bound is caller-supplied and may be
       // Long.MaxValue — `bound * 8` in Long overflows negative and
       // silently forfeits the zero-extra-work shortcut
       case None => stats.sizeInBytes <= BigInt(bound) * 8

@@ -127,16 +127,6 @@ object Dedup {
                                  n: Int): DataFrame =
     df.select(col(idCol).as("doc"), explode(hashedWordShingles(textCol, n)).as("h"))
 
-  /** Drop accounting from the most recent df-capped
-    * [[ngramJaccardPairs]] call on this thread: (shingles dropped,
-    * postings dropped, hottest df seen). (0,0,0) when nothing was
-    * dropped; null before any capped call. Diagnostic only — the
-    * numbers are ALSO logged at drop time, so an operator reading the
-    * job log sees what a cap excluded without code.
-    */
-  private val lastDropTL = new ThreadLocal[(Long, Long, Long)]
-  def lastDfCapDrops: (Long, Long, Long) = lastDropTL.get
-
   /** All pairs with shingle-set Jaccard ≥ minJaccard.
     *
     * Exact (quadratic in co-shingled docs) — the verification kernel.
@@ -144,98 +134,27 @@ object Dedup {
     * is still shuffle-bounded: one self-equi-join on the shingle key
     * plus two broadcast-size joins for set sizes.
     *
-    * `maxShingleDf` (round-13 judge item 2 — the hot-shingle O(B²)
-    * watch item): a shingle appearing in B docs emits B(B−1)/2 pair
-    * rows from the self-join no matter how the join spills — one
-    * boilerplate header in a million docs is 5·10¹¹ rows. A positive
-    * cap drops shingles with document frequency > cap BEFORE pair
-    * generation, bounding any shingle's pair fan-out at cap²/2.
-    * Semantics under a cap are EXPLICIT, not silent:
-    *  - truth stays EXACT for every pair of docs none of whose SHARED
-    *    shingles exceeded the cap (a dropped shingle that only one
-    *    side has never entered `inter` anyway — only shared-and-
-    *    dropped shingles bias a pair, and only downward);
-    *  - reported jaccard is a LOWER BOUND otherwise (`inter`
-    *    undercounts; `na`/`nb` stay full-set sizes on purpose — an
-    *    inflated score can admit a false duplicate, a deflated one
-    *    only misses boilerplate-bound pairs the cap chose to give up);
-    *  - what was dropped is ACCOUNTED: shingle/posting/hottest-df
-    *    counts are logged per run and readable via
-    *    [[lastDfCapDrops]] — a capped run says what it excluded.
-    * Default 0 = off: the truth path is exact unless a caller opts in.
+    * Pairs come from a sort-merge SELF-equi-join on the shingle hash,
+    * forced by hint("merge") so Catalyst can never pick broadcast or a
+    * hash build. Memory stays bounded at ANY bucket heat: both sides
+    * sort-spill to disk and the buffered side's current-key group sits
+    * in a spillable row array — a hot (boilerplate) shingle costs
+    * disk, never a GC storm. The exchange on `h` is reused by both
+    * sides of the self-join.
     */
   def ngramJaccardPairs(df0: DataFrame, idCol: String, textCol: String,
-                        n: Int = 5, minJaccard: Double = 0.8,
-                        streamedPairs: Option[Boolean] = None,
-                        maxShingleDf: Long = 0): DataFrame = {
+                        n: Int = 5, minJaccard: Double = 0.8): DataFrame = {
     val df = Par.spread(df0)
-    val shFull = hashedShingleTable(df, idCol, textCol, n)
-    val sh = if (maxShingleDf <= 0) shFull else {
-      // per-shingle df on the same key the pair join shuffles on —
-      // Catalyst reuses the exchange, so the cap costs one aggregate
-      // over an exchange that was being paid anyway, not a new scan
-      val dfs = shFull.groupBy("h").agg(count(lit(1)).as("__df"))
-        .localCheckpoint() // drop accounting + semi-join share one eval
-      val hot = dfs.filter(col("__df") > maxShingleDf)
-      val drops = hot.agg(
-        coalesce(count(lit(1)), lit(0L)),
-        coalesce(sum(col("__df")), lit(0L)),
-        coalesce(max(col("__df")), lit(0L))).head()
-      val acct = (drops.getLong(0), drops.getLong(1), drops.getLong(2))
-      lastDropTL.set(acct)
-      if (acct._1 > 0)
-        System.err.println(
-          s"[graft] ngramJaccardPairs df-cap $maxShingleDf dropped ${acct._1} " +
-            s"shingles / ${acct._2} postings (hottest df ${acct._3}) — " +
-            "affected pair scores are lower bounds")
-      shFull.join(hot.select("h"), Seq("h"), "left_anti")
-    }
+    val sh = hashedShingleTable(df, idCol, textCol, n)
     // set sizes from the un-exploded scan (size of the distinct-shingle
     // array): no second explode+hash pass, and small enough to
     // broadcast — the shingle grouping stays the only real shuffle
     val sizes = df.select(col(idCol).as("doc"), size(hashedWordShingles(textCol, n)).as("n_sh"))
-    // TWO pair-generation regimes (default STREAMED; override with
-    // `streamedPairs` for corpora where the single-shuffle grouped
-    // shape is known to win):
-    //
-    //  - STREAMED: a sort-merge SELF-equi-join on h, forced by
-    //    hint("merge") so Catalyst can never pick broadcast or a hash
-    //    build. Bounded memory at ANY bucket heat: both sides
-    //    sort-spill to disk and the buffered side's current-key group
-    //    sits in a spillable row array — a hot bucket costs disk,
-    //    never a GC storm. At n=3 the grouped path's hot boilerplate
-    //    3-gram arrays herded into full GCs (round-12 driver run:
-    //    137 s of task GC on the q297 truth side, 25.3 s registered
-    //    vs a 2.1 s band; streamed: 1.8 s). Round-13 measured
-    //    streamed ≤ grouped on warm JVMs at sf0.1 (1.3 vs 1.9 s) and
-    //    at 10× (3.6 vs 4.0 s) — the default on both speed and
-    //    allocation grounds.
-    //  - GROUPED: collect_list per shingle hash → nested explodes
-    //    over the sorted bucket. ONE shuffle, no sort — competitive
-    //    when buckets stay small (long shingles), but per-key arrays
-    //    are O(bucket) on-heap: an allocation bomb on hot shingles.
-    val streamed = streamedPairs.getOrElse(true)
-    val inter =
-      if (streamed)
-        sh.select(col("h"), col("doc").as("doc_a")).hint("merge")
-          .join(sh.select(col("h"), col("doc").as("doc_b")), Seq("h"))
-          .filter(col("doc_a") < col("doc_b"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("inter"))
-      else
-        // pairs stream out of two NESTED explodes (doc_a from
-        // posexplode, doc_b from the suffix slice), so per-row memory
-        // is O(bucket) — never the O(bucket²) a single flattened pair
-        // array would materialize. The sorted array gives doc_a <
-        // doc_b free.
-        sh.groupBy(col("h"))
-          .agg(sort_array(collect_list(col("doc"))).as("ds"))
-          .filter(size(col("ds")) > 1)
-          .select(posexplode(col("ds")).as(Seq("i", "doc_a")), col("ds"))
-          .select(col("doc_a"),
-            explode(expr("slice(ds, i + 2, size(ds) - i - 1)")).as("doc_b"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("inter"))
+    val inter = sh.select(col("h"), col("doc").as("doc_a")).hint("merge")
+      .join(sh.select(col("h"), col("doc").as("doc_b")), Seq("h"))
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("inter"))
     // no broadcast hint on sizes: one row per doc is NOT broadcastable
     // at corpus scale — Catalyst auto-broadcasts when it actually fits
     inter
@@ -638,12 +557,10 @@ object Dedup {
 
   /** The PPJoin candidate stage alone (distinct `(doc_a, doc_b)`
     * pairs surviving the prefix + length filters, before the exact
-    * verify) — exposed so scale rehearsals can measure candidate
-    * volume, the quantity that decides whether the filter survives a
-    * 100× corpus. `docs` must carry `(doc, toks, len)` as prepared by
+    * verify). `docs` must carry `(doc, toks, len)` as prepared by
     * [[prefixFilterJaccardPairs]].
     */
-  def prefixFilterCandidates(docs: DataFrame, tNum: Int, tDen: Int): DataFrame = {
+  private def prefixFilterCandidates(docs: DataFrame, tNum: Int, tDen: Int): DataFrame = {
     val toks = docs.select(col("doc"), explode(col("toks")).as("token"))
     val freq = toks.groupBy("token").agg(count(lit(1)).as("tf"))
     val ranked = Prefix.withGlobalPosition(freq, Seq("tf", "token"))

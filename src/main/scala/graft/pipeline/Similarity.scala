@@ -825,8 +825,7 @@ object Similarity {
     * appended, so surviving duplicate ids carry value-identical rows
     * and `distinct()` is the whole dedup — same invariant the minhash
     * compactor rests on. Screens against the compacted plane must be
-    * verdict-identical to screens against segments-minus-tombstones
-    * (the ScaleRehearsal loop pins `screen_equiv` per compaction).
+    * verdict-identical to screens against segments-minus-tombstones.
     */
   def semDedupStoreCompact(segments: Seq[DataFrame],
                            tombstones: DataFrame): DataFrame = {

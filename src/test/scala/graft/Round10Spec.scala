@@ -26,9 +26,8 @@ class Round10Spec extends SparkSpec {
 
   test("k-truss wedge Bloom screen is lossless: both closure paths give identical censuses") {
     import spark.implicits._
-    // the gate-scale graphs sit below WedgeBloomMinEdges, so the
-    // screened path would otherwise run only in the (oracle-less)
-    // scale rehearsal — force it here with bloomMinEdges = 0 and pin
+    // the gate-scale graphs sit below WedgeBloomMinEdges, so no gate
+    // runs the screened path — force it here with bloomMinEdges = 0 and pin
     // equality against the unscreened path on a triangle-rich graph
     val rnd = new scala.util.Random(20260815)
     val edges = (0 until 400).map { _ =>

@@ -3,9 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Round-14 pins: the hot-shingle df-cap on the exact-pair truth path
-  * (round-13 judge item 2) — exactness below the cutoff, lower-bound
-  * semantics above it, bounded fan-out, and drop accounting.
+/** Round-14 pins: the exact-pair truth path on a hot (boilerplate)
+  * shingle, ranged percentiles, and the native text/shingle kernels.
   */
 class Round14Spec extends AnyFunSuite with SparkSpec {
 
@@ -21,41 +20,24 @@ class Round14Spec extends AnyFunSuite with SparkSpec {
       (10L to 15L).map(i => (i, s"u$i v$i x y z w$i"))).toDF("doc_id", "text")
   }
 
-  test("df-cap: cap at/above the hottest df is a no-op (truth exact below cutoff)") {
-    val base = pipeline.Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
-      n = 3, minJaccard = 0.0).orderBy("doc_a", "doc_b").collect().toSeq
-    val capped = pipeline.Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
-      n = 3, minJaccard = 0.0, maxShingleDf = 6L)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    assert(capped == base,
-      "a cap no shingle exceeds must reproduce the uncapped truth bit-for-bit")
-    assert(pipeline.Dedup.lastDfCapDrops == ((0L, 0L, 0L)))
-  }
-
-  test("df-cap: hot shingle excluded — bounded fan-out, sub-cap pairs exact, accounting filled") {
-    val base = pipeline.Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
+  test("ngramJaccardPairs: a hot shingle's bucket yields every pair at its exact score") {
+    val got = pipeline.Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
       n = 3, minJaccard = 0.0).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val capped = pipeline.Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
-      n = 3, minJaccard = 0.0, maxShingleDf = 5L).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    // the 6-doc boilerplate bucket owes C(6,2)=15 pair rows uncapped;
-    // capped, docs 10..15 share nothing else, so every such pair is gone
-    val boilerPairs = base.keys.filter { case (a, b) => a >= 10L && b >= 10L }
+    // the 6-doc boilerplate bucket owes C(6,2) = 15 pair rows: docs
+    // 10..15 share nothing but "x y z"
+    val boilerPairs = got.keys.filter { case (a, b) => a >= 10L && b >= 10L }
     assert(boilerPairs.size == 15)
-    assert(boilerPairs.forall(!capped.contains(_)),
-      "pairs held together ONLY by the hot shingle must vanish under the cap")
-    // pairs among docs 1-3 never touch the hot shingle: scores identical
-    val organic = base.keys.filter { case (a, b) => a <= 3L && b <= 3L }
-    assert(organic.nonEmpty)
-    organic.foreach { k =>
-      assert(capped(k) == base(k),
-        s"sub-cap pair $k must keep its exact uncapped score")
-    }
-    // every capped score is a lower bound of the uncapped one
-    capped.foreach { case (k, v) => assert(v <= base(k)) }
-    // accounting: exactly one shingle dropped, 6 postings, hottest df 6
-    assert(pipeline.Dedup.lastDfCapDrops == ((1L, 6L, 6L)))
+    // driver-side exact Jaccard over the 3-gram sets, rounded like the op
+    val shingles = corpus.collect().map { r =>
+      r.getLong(0) -> r.getString(1).split(' ').sliding(3).map(_.mkString(" ")).toSet
+    }.toMap
+    val want = (for {
+      (a, sa) <- shingles; (b, sb) <- shingles
+      if a < b && (sa & sb).nonEmpty
+    } yield (a, b) -> BigDecimal((sa & sb).size.toDouble / (sa | sb).size)
+      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
+    assert(got == want)
   }
 
   test("ranged percentiles: boundary collect stays within the 2P-2 bound") {
@@ -147,15 +129,6 @@ class Round14Spec extends AnyFunSuite with SparkSpec {
     val n = df.select(explode(pipeline.Dedup.hashedWordShingles("text", 3)).as("h"))
       .distinct().count()
     assert(n > 1000, s"expected a diverse shingle set, got $n")
-  }
-
-  test("df-cap: default (0) leaves the truth path untouched") {
-    val a = pipeline.Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
-      n = 3, minJaccard = 0.5).orderBy("doc_a", "doc_b").collect().toSeq
-    val b = pipeline.Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
-      n = 3, minJaccard = 0.5, maxShingleDf = 0L)
-      .orderBy("doc_a", "doc_b").collect().toSeq
-    assert(a == b)
   }
 
   // ---- round-14 text-stats kernels: value identity vs the SQL chains ----

@@ -13,7 +13,8 @@ import org.apache.spark.sql.DataFrame
   *  2. the reference-flagship `/multi` batch must stay ONE unioned
   *     plan whose physical node census is INVARIANT in the shape
   *     count — shapes ride the broadcast mask plane, so adding shapes
-  *     can never add scans, joins, or unions.
+  *     can never add scans, joins, or unions (checked by
+  *     [[PlanCheck.zonalMultiCheck]]).
   */
 class Round9Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
@@ -41,31 +42,7 @@ class Round9Spec extends SparkSpec {
   }
 
   test("/multi batch plan census is invariant in the shape count (no per-shape fan-out)") {
-    import graft.operators.Zonal
-    val path = graft.sources.ZonalFixture.ensureMasks(spark, dir)
-    val spec = graft.sources.ZonalFixture.specFor(dir)
-    val metas = graft.sources.TileCatalog.readMeta(path)
-    def plan(nx: Int, ny: Int): DataFrame = {
-      val shapes = graft.sources.ZonalFixture.subShapes(spec, nx, ny)
-      val union = graft.geom.GeomOps.unionAll(shapes)
-      val shared = Seq("nlcd", "soil", "slope").map { id =>
-        id -> Zonal.Layer(metas(id),
-          graft.sources.TileCatalog.readLayer(spark, path, metas(id), union))
-      }.toMap
-      Zonal.multiBatch(spark, metas("nlcd").layout, shared, shapes,
-        graft.sources.ZonalFixture.streamLines(spec),
-        Seq(Zonal.BatchCount("nlcd_soil", Seq("nlcd", "soil")),
-          Zonal.BatchCount("cnt_soil", Seq("soil")),
-          Zonal.BatchAverage("avg_slope", Seq("soil"), "slope"),
-          Zonal.BatchLines("nlcd_streams", Seq("nlcd"))))
-    }
-    def census(df: DataFrame): Map[String, Int] =
-      df.queryExecution.sparkPlan.collect { case n => n.nodeName }
-        .groupBy(identity).map { case (k, v) => k -> v.size }.toMap
-    val small = census(plan(2, 2))
-    val big = census(plan(8, 4))
-    assert(small == big,
-      s"multi plan census varies with shape count: 4-shape=$small vs 32-shape=$big")
-    assert(big.keys.exists(_.contains("Union")), "expected ONE unioned plan")
+    val problems = PlanCheck.zonalMultiCheck(spark, dir)
+    assert(problems.isEmpty, problems.mkString("; "))
   }
 }

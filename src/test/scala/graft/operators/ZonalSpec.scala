@@ -141,6 +141,15 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
     assert(got(1) == (4 to 6).map(c => s"List($c, ${NoData.INT})" -> 3).toMap)
   }
 
+  test("plane emits one row per (tile, shape, value tuple), never per pixel") {
+    val rows = Zonal.plane(layout, Seq(layer("ca")), None, Seq(aoi),
+      Zonal.PolygonMask(Rasterizer.DEFAULT)).collect()
+    // each of the 4 tiles holds 3 masked gc values (3 px each); tile
+    // (0,0) also splits off the NODATA cell at (2,2): 4×3 + 1 rows
+    assert(rows.length == 13)
+    assert(rows.map(_.getAs[Long]("cnt")).sum == 36L)
+  }
+
   test("tile missing from ALL layers contributes no pixels (join-keys semantics)") {
     val df = Zonal.groupedCount(spark, layout, Seq(layer("cb")), square(4, 1, 7, 4))
     assert(df.count() == 0)
