@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.locationtech.jts.geom.{Geometry, GeometryFactory, LineString, MultiLineString, MultiPolygon}
@@ -14,14 +17,15 @@ import graft.sources.TileCatalog.RasterMeta
   * [[plane]]:
   *
   *   pruned scan(s) → full-outer align join on SpatialKey (NODATA
-  *   fill) → one flatMap that, per tile and per shape whose envelope
-  *   touches the tile, masks the shape's cells and PARTIALLY
-  *   AGGREGATES them by value tuple → tiny final Catalyst aggregation.
+  *   fill) → one [[ZonalPlaneExec]] that, per tile and per shape whose
+  *   envelope touches the tile, masks the shape's cells, reads them in
+  *   place from the tile arrays and PARTIALLY AGGREGATES them by value
+  *   tuple → tiny final Catalyst aggregation.
   *
   * A [[Mask]] decides which cells of a tile a shape covers:
   *  - [[PolygonMask]]: `Rasterizer.foreachCellByPolygon` under the
-  *    request's `Rasterizer.Options`, after clipping the shape to the
-  *    tile (rows A–C, E, F, `RasterGroupedSum` and G's polygon ops);
+  *    request's `Rasterizer.Options` (rows A–C, E, F,
+  *    `RasterGroupedSum` and G's polygon ops);
   *  - [[LineMask]]: `Rasterizer.foreachCellByLines`, whose per-(tile,
   *    shape) BitSet visits each crossed pixel once. Pixels belong to
   *    exactly one tile, so the per-tile counts already are the
@@ -31,13 +35,15 @@ import graft.sources.TileCatalog.RasterMeta
   * Every operator is a projection or aggregation over that plane; a
   * single-AOI operator is the one-shape case of its batch form.
   *
-  * The flatMap emits one row per (tile, shape, value-tuple) — never
+  * The kernel emits one row per (tile, shape, value-tuple) — never
   * per pixel — so shuffle volume is O(tiles × groups), not O(pixels):
   * a 100 TB catalog shuffles a few hundred rows per tile regardless of
   * tile size (group cardinality is ≤ ~500 in the reference workload,
   * SURVEY §6). This is the reference's lock-free TrieMap partial
   * aggregation (Geoprocessing.scala:215,302,348,405) relocated into
-  * the task, with Spark's hash aggregation finishing the job.
+  * the task, with Spark's hash aggregation finishing the job. Its
+  * counters (tiles in, envelope skips, masked pixels, rows out, kernel
+  * time) are the exec's SQLMetrics.
   *
   * NODATA semantics (SURVEY §2.3):
   *  - group values: NODATA (Int.MinValue) groups as itself;
@@ -56,7 +62,7 @@ object Zonal {
   final case class Layer(meta: RasterMeta, df: DataFrame)
 
   /** Serializable lazy-parsing geometry holder for broadcast. */
-  private final class BGeom(val wkb: Array[Byte], exmin: Double, eymin: Double,
+  private[graft] final class BGeom(val wkb: Array[Byte], exmin: Double, eymin: Double,
                             exmax: Double, eymax: Double) extends Serializable {
     @transient private var g: Geometry = _
     def geom: Geometry = {
@@ -80,63 +86,9 @@ object Zonal {
     new BGeom(GeomOps.toWkb(g), env.getMinX, env.getMinY, env.getMaxX, env.getMaxY)
   }
 
-  /** Count of (tile, shape) pairs rejected by the envelope fast-path —
-    * a per-JVM diagnostic for specs (meaningful in local mode; on a
-    * cluster each executor counts its own skips).
-    */
-  private[graft] val envSkips = new java.util.concurrent.atomic.AtomicLong
-
-  /** Decode a grouping tile to Int values regardless of stored cell
-    * type (reference semantics: grouping rasters are read as Int,
-    * `tile.get` — double cells truncate, NaN → NODATA).
-    */
-  private def decodeIntTile(row: Row, ord: Int): Array[Int] =
-    if (row.isNullAt(ord)) null
-    else row.getSeq[Any](ord).map {
-      case i: Int => i
-      case d: Double => if (d.isNaN) NoData.INT else d.toInt
-      case null => NoData.INT
-    }.toArray
-
-  /** Decode a target tile to Double regardless of stored cell type
-    * (reference `tile.getDouble` — Int NODATA widens to NaN).
-    */
-  private def decodeDoubleTile(row: Row, ord: Int): Array[Double] =
-    if (row.isNullAt(ord)) null
-    else row.getSeq[Any](ord).map {
-      case d: Double => d
-      case i: Int => if (i == NoData.INT) Double.NaN else i.toDouble
-      case null => Double.NaN
-    }.toArray
-
-  /** Hash-map key wrapping a primitive int array. */
-  private final class ValsKey(val a: Array[Int]) {
-    override val hashCode: Int = java.util.Arrays.hashCode(a)
-    override def equals(o: Any): Boolean = o match {
-      case k: ValsKey => java.util.Arrays.equals(a, k.a)
-      case _ => false
-    }
-  }
-
-  /** Per-group accumulator for one (tile, shape). */
-  private final class Agg {
-    var cnt: Long = 0L
-    var sum: Double = 0.0
-    var mn: Double = Double.NaN
-    var mx: Double = Double.NaN
-    def add(tv: Double): Unit = {
-      cnt += 1
-      if (!tv.isNaN) {
-        sum += tv
-        if (mn.isNaN || tv < mn) mn = tv
-        if (mx.isNaN || tv > mx) mx = tv
-      }
-    }
-  }
-
   /** Full-outer align join of N layers on SpatialKey (reference
     * `joinCollectionLayers`, Utils.scala:221-232 — missing tiles stay
-    * null here and NODATA-fill inside the flatMap).
+    * null here and read as NODATA inside the kernel).
     */
   private def joinLayers(layers: Seq[Layer]): DataFrame = {
     require(layers.nonEmpty, "at least one layer")
@@ -149,7 +101,7 @@ object Zonal {
     renamed.reduce((a, b) => a.join(b, Seq("key_col", "key_row"), "full_outer"))
   }
 
-  private val planeSchema = StructType(Seq(
+  private[graft] val planeSchema = StructType(Seq(
     StructField("shape_id", IntegerType, nullable = false),
     StructField("vals", ArrayType(IntegerType, containsNull = false)),
     StructField("cnt", LongType, nullable = false),
@@ -157,24 +109,26 @@ object Zonal {
     StructField("mn", DoubleType, nullable = true),
     StructField("mx", DoubleType, nullable = true)))
 
-  /** Which cells of a tile a shape covers; shipped inside the kernel's
-    * closure, so it must serialize.
+  /** Which cells of a tile a shape covers; shipped inside the kernel,
+    * so it must serialize.
     */
   private[graft] sealed trait Mask extends Serializable {
     def foreachCell(g: Geometry, re: RasterExtent)(f: (Int, Int) => Unit): Unit
   }
 
-  /** Polygon coverage under `opts`. The shape is pre-clipped to the
-    * tile extent: that bounds the scanline to the tile and keeps
-    * per-tile cost proportional to local geometry complexity
-    * (center-sampling is invariant under this clip). Not clipped for
-    * PixelIsArea/includePartial=false, where artificial clip edges
-    * would wrongly erode interior cells.
+  /** Polygon coverage under `opts`. Center sampling (the default) runs
+    * on the whole shape: the scanline's active-edge sweep touches only
+    * the edges spanning each row of this tile, and a center-sampled
+    * cell does not move under a clip to the tile. PixelIsArea with
+    * includePartial clips the shape to the tile first, which bounds its
+    * boundary walk to the tile; fully-inside PixelIsArea is not
+    * clipped, where artificial clip edges would wrongly erode interior
+    * cells.
     */
   private[graft] final case class PolygonMask(opts: Rasterizer.Options) extends Mask {
     def foreachCell(g: Geometry, re: RasterExtent)(f: (Int, Int) => Unit): Unit = {
       val clipped =
-        if ((opts.pixelIsArea && !opts.includePartial) || g.getNumGeometries == 0) g
+        if (!(opts.pixelIsArea && opts.includePartial) || g.getNumGeometries == 0) g
         else try g.intersection(g.getFactory.toGeometry(re.extent.toEnvelope))
         catch { case _: Exception => g }
       Rasterizer.foreachCellByPolygon(clipped, re, opts)(f)
@@ -187,54 +141,181 @@ object Zonal {
       Rasterizer.foreachCellByLines(g, re)(f)
   }
 
-  /** THE zonal kernel — the partially-aggregated masked plane: per
-    * (tile, shape, value-tuple) one row `(shape_id, vals, cnt, sum, mn,
-    * mx)` where sum/mn/mx aggregate the (optional) target under the
-    * NODATA rules and `shape_id` indexes `shapes`.
+  /** Per-task partial aggregate: open addressing from a packed group
+    * key to (cnt, sum, mn, mx) in parallel primitive arrays. `clear`
+    * resets only the slots the last (tile, shape) used; `slot(e)` is
+    * the e-th key seen since then.
+    */
+  private final class Scratch {
+    private var used = new Array[Boolean](64)
+    var keys = new Array[Long](64)
+    var cnt = new Array[Long](64)
+    var sum = new Array[Double](64)
+    var mn = new Array[Double](64)
+    var mx = new Array[Double](64)
+    var slot = new Array[Int](64)
+    var size = 0
+
+    def clear(): Unit = {
+      var e = 0
+      while (e < size) { used(slot(e)) = false; e += 1 }
+      size = 0
+    }
+
+    def add(k: Long, tv: Double): Unit = {
+      val s = find(k)
+      cnt(s) += 1
+      if (!tv.isNaN) {
+        sum(s) += tv
+        if (mn(s).isNaN || tv < mn(s)) mn(s) = tv
+        if (mx(s).isNaN || tv > mx(s)) mx(s) = tv
+      }
+    }
+
+    private def find(k: Long): Int = {
+      val m = used.length - 1
+      val h = k * 0x9E3779B97F4A7C15L
+      var s = (h ^ (h >>> 32)).toInt & m
+      while (used(s) && keys(s) != k) s = (s + 1) & m
+      if (used(s)) s
+      else if (2 * (size + 1) > used.length) { grow(); find(k) }
+      else {
+        used(s) = true; keys(s) = k; cnt(s) = 0L; sum(s) = 0.0
+        mn(s) = Double.NaN; mx(s) = Double.NaN
+        slot(size) = s; size += 1
+        s
+      }
+    }
+
+    private def grow(): Unit = {
+      val (k0, c0, s0, mn0, mx0, sl0, n0) = (keys, cnt, sum, mn, mx, slot, size)
+      val cap = 2 * used.length
+      used = new Array[Boolean](cap); keys = new Array[Long](cap); cnt = new Array[Long](cap)
+      sum = new Array[Double](cap); mn = new Array[Double](cap); mx = new Array[Double](cap)
+      slot = new Array[Int](cap); size = 0
+      var e = 0
+      while (e < n0) {
+        val o = sl0(e)
+        val s = find(k0(o))
+        cnt(s) = c0(o); sum(s) = s0(o); mn(s) = mn0(o); mx(s) = mx0(o)
+        e += 1
+      }
+    }
+  }
+
+  /** THE zonal kernel, run by [[ZonalPlaneExec]] over the aligned tile
+    * rows `(key_col, key_row, t0, …)`: per (tile, shape, value tuple)
+    * one row `(shape_id, vals, cnt, sum, mn, mx)` where sum/mn/mx
+    * aggregate the (optional) target under the NODATA rules and
+    * `shape_id` indexes `shapes`. Layer i (groups first, then the
+    * target) stores Int cells iff `isInt(i)`.
+    *
+    * Masked cells are read in place from each tile's `ArrayData`,
+    * under the reference's `tile.get` / `tile.getDouble` rules:
+    *  - group value: Int as stored; Double truncates, NaN → NODATA;
+    *  - target value: Double as stored; Int NODATA → NaN;
+    *  - a null element, or a tile this layer lacks (the full-outer
+    *    align fill), reads as NODATA.
+    * Up to two group values pack into one `Long` key; wider tuples
+    * are interned to a per-task id.
+    */
+  private[graft] final class Kernel(layout: Layout, isInt: Array[Boolean], n: Int,
+                                    hasTarget: Boolean, shapes: Array[BGeom],
+                                    mask: Mask) extends Serializable {
+    override def toString: String =
+      s"Kernel(groups=$n, target=$hasTarget, shapes=${shapes.length}, $mask)"
+
+    def run(tiles: Iterator[InternalRow], m: ZonalPlaneExec.Metrics): Iterator[InternalRow] = {
+      val acc = new Scratch
+      val toUnsafe = UnsafeProjection.create(planeSchema)
+      val wideIds = scala.collection.mutable.HashMap.empty[Seq[Int], Long]
+      val wide = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
+      val cells = new Array[ArrayData](isInt.length)
+      val tileCols = layout.tileCols
+
+      def group(i: Int, idx: Int): Int = {
+        val a = cells(i)
+        if (a == null || a.isNullAt(idx)) NoData.INT
+        else if (isInt(i)) a.getInt(idx)
+        else { val d = a.getDouble(idx); if (d.isNaN) NoData.INT else d.toInt }
+      }
+      def target(idx: Int): Double =
+        if (!hasTarget) 0.0
+        else {
+          val a = cells(n)
+          if (a == null || a.isNullAt(idx)) Double.NaN
+          else if (!isInt(n)) a.getDouble(idx)
+          else { val v = a.getInt(idx); if (v == NoData.INT) Double.NaN else v.toDouble }
+        }
+      def key(idx: Int): Long = n match {
+        case 0 => 0L
+        case 1 => group(0, idx).toLong
+        case 2 => (group(0, idx).toLong << 32) | (group(1, idx) & 0xffffffffL)
+        case _ =>
+          val t = Array.tabulate(n)(group(_, idx))
+          wideIds.getOrElseUpdate(scala.collection.immutable.ArraySeq.unsafeWrapArray(t),
+            { wide += t; wide.size - 1L })
+      }
+      def vals(k: Long): Array[Int] = n match {
+        case 0 => Array(0)
+        case 1 => Array(k.toInt)
+        case 2 => Array((k >>> 32).toInt, k.toInt)
+        case _ => wide(k.toInt)
+      }
+
+      tiles.flatMap { row =>
+        val t0 = System.nanoTime()
+        val re = layout.rasterExtent(row.getInt(0), row.getInt(1))
+        var i = 0
+        while (i < cells.length) {
+          cells(i) = if (row.isNullAt(2 + i)) null else row.getArray(2 + i)
+          i += 1
+        }
+        val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+        var si = 0
+        while (si < shapes.length) {
+          // envelope fast-path: a shape whose bbox misses this tile's
+          // extent masks zero cells here — skip the mask entirely. At
+          // 10⁴-shape batches this turns the per-tile cost from
+          // O(shapes) masks into O(shapes) double compares plus work
+          // only for genuinely overlapping pairs.
+          if (shapes(si).disjointFrom(re.extent)) m.envelopeSkips += 1
+          else {
+            acc.clear()
+            mask.foreachCell(shapes(si).geom, re) { (c, r) =>
+              val idx = r * tileCols + c
+              acc.add(key(idx), target(idx))
+            }
+            var e = 0
+            while (e < acc.size) {
+              val s = acc.slot(e)
+              val mn = if (acc.mn(s).isNaN) null else acc.mn(s)
+              val mx = if (acc.mx(s).isNaN) null else acc.mx(s)
+              out += toUnsafe(new GenericInternalRow(Array[Any](si,
+                UnsafeArrayData.fromPrimitiveArray(vals(acc.keys(s))),
+                acc.cnt(s), acc.sum(s), mn, mx))).copy()
+              m.maskedPixels += acc.cnt(s)
+              e += 1
+            }
+          }
+          si += 1
+        }
+        m.tilesIn += 1
+        m.rowsOut += out.size
+        m.kernelTime += System.nanoTime() - t0
+        out
+      }
+    }
+  }
+
+  /** The partially-aggregated masked plane of `shapes` over the aligned
+    * layers, as a [[ZonalPlane]] node.
     */
   private[graft] def plane(layout: Layout, groupLayers: Seq[Layer], target: Option[Layer],
                            shapes: Seq[Geometry], mask: Mask): DataFrame = {
-    val joined = joinLayers(groupLayers ++ target.toSeq)
-    val n = groupLayers.size
-    val hasTarget = target.isDefined
-    val bgs = shapes.map(bgeom)
-    val lay = layout
-    val tileCols = layout.tileCols
-    joined.flatMap { row =>
-      val re = lay.rasterExtent(row.getInt(0), row.getInt(1))
-      val groups: Array[Array[Int]] = Array.tabulate(n)(i => decodeIntTile(row, 2 + i))
-      val tgt: Array[Double] = if (hasTarget) decodeDoubleTile(row, 2 + n) else null
-      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-      bgs.zipWithIndex.foreach { case (bg, si) =>
-        // envelope fast-path: a shape whose bbox misses this tile's
-        // extent masks zero cells here — skip the mask entirely. At
-        // 10⁴-shape batches this turns the per-tile cost from
-        // O(shapes) JTS clips or line walks into O(shapes) double
-        // compares plus work only for genuinely overlapping pairs.
-        if (bg.disjointFrom(re.extent)) Zonal.envSkips.incrementAndGet()
-        else {
-          val accum = scala.collection.mutable.HashMap.empty[ValsKey, Agg]
-          mask.foreachCell(bg.geom, re) { (c, r) =>
-            val vals = new Array[Int](n)
-            var i = 0
-            while (i < n) {
-              vals(i) = if (groups(i) == null) NoData.INT else groups(i)(r * tileCols + c)
-              i += 1
-            }
-            val tv =
-              if (!hasTarget) 0.0
-              else if (tgt == null) Double.NaN
-              else tgt(r * tileCols + c)
-            accum.getOrElseUpdate(new ValsKey(vals), new Agg).add(tv)
-          }
-          accum.foreach { case (k, a) =>
-            out += Row(si, if (n == 0) Seq(0) else k.a.toSeq, a.cnt, a.sum,
-              if (a.mn.isNaN) null else a.mn, if (a.mx.isNaN) null else a.mx)
-          }
-        }
-      }
-      out
-    }(Encoders.row(planeSchema)).toDF()
+    val layers = groupLayers ++ target.toSeq
+    ZonalPlane.of(joinLayers(layers), new Kernel(layout, layers.map(_.meta.isInt).toArray,
+      groupLayers.size, target.isDefined, shapes.map(bgeom).toArray, mask))
   }
 
   /** Final aggregation of a plane per (shape, value tuple). */
@@ -250,7 +331,7 @@ object Zonal {
 
   /** Row F — `getRasterGroupedCountMany` (Geoprocessing.scala:114-126):
     * grouped count per input polygon; every shape masks each tile in
-    * ONE flatMap pass (shape_id column instead of per-shape rescans —
+    * ONE kernel pass (shape_id column instead of per-shape rescans —
     * the reference fetches layers once for the union AOI,
     * Geoprocessing.scala:116-120).
     */

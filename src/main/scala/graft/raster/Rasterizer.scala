@@ -15,8 +15,9 @@ import org.locationtech.jts.geom._
   * (Amanatides–Woo grid walk) for PixelIsArea+includePartial; the same
   * grid walk for lines.
   *
-  * Runs per tile inside Spark `flatMap` tasks — no allocation-heavy
-  * abstractions, plain index arithmetic on primitive arrays.
+  * Runs per (tile, shape) inside the zonal kernel's tasks — no
+  * allocation-heavy abstractions, plain index arithmetic on primitive
+  * arrays.
   */
 object Rasterizer {
 
@@ -112,48 +113,90 @@ object Rasterizer {
     p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN)
 
   /** Even-odd scanline fill sampling pixel CENTERS (PixelIsPoint).
-    * For each pixel row, crossings of all edges with the horizontal
+    * For each pixel row, crossings of the edges with the horizontal
     * line through the row's center y are collected (half-open rule:
     * an edge [y1,y2) counts iff min<=y<max, eliminating double-counted
     * vertices), sorted, and filled pairwise.
+    *
+    * Rows run top-down through an active-edge list. Each edge is
+    * bucketed at a row at or just above the first center below its
+    * upper end, and leaves the list at the first center below its
+    * lower end, so a row only touches the edges spanning it. The
+    * membership test and the crossing formula are evaluated exactly
+    * as written above, so the geometry need not be clipped to the
+    * tile: crossings off the tile only clamp the filled column range.
+    * Edges and crossings live in primitive arrays; nothing is
+    * allocated per row.
     */
   private def scanlineCenters(polys: Seq[Polygon], re: RasterExtent)
                              (f: (Int, Int) => Unit): Unit = {
-    // gather edges once
-    val edges = new scala.collection.mutable.ArrayBuffer[(Double, Double, Double, Double)]
+    val rings = polys.flatMap(ringsOf)
+    val cap = rings.map(r => math.max(0, r.getNumPoints - 1)).sum
+    val ylo = new Array[Double](cap)
+    val yhi = new Array[Double](cap)
+    val xlo = new Array[Double](cap)
+    val xhi = new Array[Double](cap)
+    var ne = 0
     var ymin = Double.MaxValue
     var ymax = Double.MinValue
-    polys.foreach { p =>
-      ringsOf(p).foreach { ring =>
-        val cs = ring.getCoordinates
-        var i = 0
-        while (i < cs.length - 1) {
-          val a = cs(i); val b = cs(i + 1)
-          if (a.y != b.y) edges += ((a.x, a.y, b.x, b.y))
-          ymin = math.min(ymin, math.min(a.y, b.y))
-          ymax = math.max(ymax, math.max(a.y, b.y))
+    rings.foreach { ring =>
+      val cs = ring.getCoordinates
+      var i = 0
+      while (i < cs.length - 1) {
+        val a = cs(i); val b = cs(i + 1)
+        if (a.y != b.y) {
+          if (a.y < b.y) { ylo(ne) = a.y; yhi(ne) = b.y; xlo(ne) = a.x; xhi(ne) = b.x }
+          else { ylo(ne) = b.y; yhi(ne) = a.y; xlo(ne) = b.x; xhi(ne) = a.x }
+          ne += 1
+        }
+        ymin = math.min(ymin, math.min(a.y, b.y))
+        ymax = math.max(ymax, math.max(a.y, b.y))
+        i += 1
+      }
+    }
+    if (ne == 0) return
+    val r0 = math.max(0, re.mapYToGrid(ymax))
+    val r1 = math.min(re.rows - 1, re.mapYToGrid(ymin))
+    if (r0 > r1) return
+    // bucket each edge one row above the row holding its upper end, so
+    // a rounded mapYToGrid can never add it late; an edge bucketed past
+    // the last row lies wholly below every center of this tile
+    val head = Array.fill(r1 - r0 + 1)(-1)
+    val next = new Array[Int](ne)
+    var e = 0
+    while (e < ne) {
+      val g = re.mapYToGrid(yhi(e))
+      val b = if (g <= r0) r0 else g - 1
+      if (b <= r1) { next(e) = head(b - r0); head(b - r0) = e }
+      e += 1
+    }
+    val active = new Array[Int](ne)
+    var na = 0
+    val xs = new Array[Double](ne)
+    var r = r0
+    while (r <= r1) {
+      e = head(r - r0)
+      while (e >= 0) { active(na) = e; na += 1; e = next(e) }
+      val y = re.rowCenter(r)
+      var nx = 0
+      var i = 0
+      while (i < na) {
+        val k = active(i)
+        // rows only descend: once below the lower end, an edge is done
+        if (!(y >= ylo(k))) { na -= 1; active(i) = active(na) }
+        else {
+          if (y < yhi(k)) {
+            xs(nx) = xlo(k) + (y - ylo(k)) / (yhi(k) - ylo(k)) * (xhi(k) - xlo(k))
+            nx += 1
+          }
           i += 1
         }
       }
-    }
-    if (edges.isEmpty) return
-    val r0 = math.max(0, re.mapYToGrid(ymax))
-    val r1 = math.min(re.rows - 1, re.mapYToGrid(ymin))
-    val xs = new scala.collection.mutable.ArrayBuffer[Double]
-    var r = r0
-    while (r <= r1) {
-      val y = re.rowCenter(r)
-      xs.clear()
-      edges.foreach { case (x1, y1, x2, y2) =>
-        val (ylo, yhi, xlo, xhi) = if (y1 < y2) (y1, y2, x1, x2) else (y2, y1, x2, x1)
-        if (y >= ylo && y < yhi)
-          xs += xlo + (y - ylo) / (yhi - ylo) * (xhi - xlo)
-      }
-      val sorted = xs.sorted
-      var i = 0
-      while (i + 1 < sorted.length) {
-        val xEnter = sorted(i)
-        val xExit = sorted(i + 1)
+      java.util.Arrays.sort(xs, 0, nx)
+      i = 0
+      while (i + 1 < nx) {
+        val xEnter = xs(i)
+        val xExit = xs(i + 1)
         // center-sampled: first col whose center >= xEnter
         var c = math.max(0, math.ceil((xEnter - re.extent.xmin) / re.cellW - 0.5).toInt)
         val cEnd = math.min(re.cols - 1,

@@ -184,8 +184,9 @@ object ZonalFixture {
     val shapes = subShapes(spec)
     val lines = streamLines(spec)
 
-    // same pre-clip as the operators (Zonal.clipToTile) — center
-    // sampling is invariant under it, cost is bounded per tile
+    // the oracle clips each shape to the tile ON PURPOSE: the
+    // operators center-sample the unclipped shape, so q30–q34 check
+    // their mask against an independently clipped one
     def clipTile(g: org.locationtech.jts.geom.Geometry,
                  re: graft.raster.RasterExtent): org.locationtech.jts.geom.Geometry = {
       val env = g.getFactory.toGeometry(re.extent.toEnvelope)

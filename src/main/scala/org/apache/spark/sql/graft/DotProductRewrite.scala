@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{DataFrame, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -111,10 +111,14 @@ object DotProductRewriteRule extends Rule[LogicalPlan] {
   }
 }
 
-/** Session extensions installing graft's Catalyst additions. */
+/** Session extensions installing graft's Catalyst additions: the
+  * dot-product rewrite, the zonal kernel's planner strategy and the
+  * `graft_*` functions.
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => DotProductRewriteRule)
+    ext.injectPlannerStrategy(_ => _root_.graft.operators.ZonalPlaneStrategy)
     GraftExtensions.functions.foreach(ext.injectFunction)
   }
 }
@@ -252,10 +256,16 @@ object GraftExtensions {
       s"$what must be a string literal, got $e")
   }
 
+  /** A DataFrame over a graft logical node. */
+  def ofPlan(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark), plan)
+
   /** Runtime installation for sessions built WITHOUT
     * `spark.sql.extensions` (a static conf): registers the functions in
-    * the session's registry and appends the dot-product rewrite to
-    * `experimental.extraOptimizations`. Idempotent. This is what keeps
+    * the session's registry, appends the dot-product rewrite to
+    * `experimental.extraOptimizations` and the zonal strategy to
+    * `experimental.extraStrategies`. Idempotent. This is what keeps
     * every pipeline operator (all hash keys are `graft_md5hi60`-based)
     * usable on an externally-built session via `GraftSession.tune`.
     */
@@ -272,5 +282,9 @@ object GraftExtensions {
         !spark.experimental.extraOptimizations.contains(DotProductRewriteRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ DotProductRewriteRule
+    if (!viaExtensions &&
+        !spark.experimental.extraStrategies.contains(_root_.graft.operators.ZonalPlaneStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ _root_.graft.operators.ZonalPlaneStrategy
   }
 }

@@ -1,5 +1,9 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 
@@ -60,6 +64,12 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
   }
 
   private val aoi = square(1, 1, 7, 7)
+
+  /** Sum of one [[ZonalPlaneExec]] metric over an executed plan. */
+  private def kernelMetric(df: DataFrame, name: String): Long =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case z: ZonalPlaneExec => z.metrics(name).value
+    }.sum
 
   test("catalog scan prunes to intersecting tiles") {
     val m = TileCatalog.readMeta(path)("ca")
@@ -230,11 +240,10 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
       Seq(gf.createMultiLineString(Array(gf.createLineString(Array(
         new Coordinate(gc + 0.2, gr + 0.5), new Coordinate(gc + 0.8, gr + 0.5))))))
     }
-    def skipsAndRows(run: => org.apache.spark.sql.DataFrame) = {
-      val before = Zonal.envSkips.get()
-      val rows = run.collect().map(r =>
+    def skipsAndRows(df: DataFrame) = {
+      val rows = df.collect().map(r =>
         (r.getInt(0), r.getSeq[Int](1).head) -> r.getLong(2)).toMap
-      (Zonal.envSkips.get() - before, rows)
+      (kernelMetric(df, "envelopeSkips"), rows)
     }
     Seq(
       "polygons" -> skipsAndRows(
@@ -259,5 +268,87 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
       Rasterizer.Options(includePartial = true, pixelIsArea = true))
     assert(point.count() == 0)
     assert(Render.toResultInt(area) == Map("List(2)" -> 1))
+  }
+
+  test("explain shows the planned kernel with its metrics, and no Row deserialization") {
+    val df = Zonal.groupedCount(spark, layout, Seq(layer("ca"), layer("cb")), aoi)
+    df.collect()
+    val plan = df.queryExecution.explainString(FormattedMode)
+    assert(plan.contains("ZonalPlaneExec"), plan)
+    Seq("tiles in", "envelope skips", "masked pixels", "group rows out", "kernel time")
+      .foreach(m => assert(plan.contains(m), s"$m missing from\n$plan"))
+    assert(!plan.contains("DeserializeToObject"), plan)
+    assert(kernelMetric(df, "tilesIn") == 4)
+    assert(kernelMetric(df, "maskedPixels") == 36)
+  }
+
+  test("cell reads: double groups truncate, NaN/null/missing read as NODATA, wide keys") {
+    // in-memory layers over the spec layout; the AOI masks gc, gr ∈ 1..6
+    def memLayer(id: String, int: Boolean, missing: (Int, Int))
+                (v: (Int, Int) => Option[Double]): Zonal.Layer = {
+      val rows = for (kc <- 0 to 1; kr <- 0 to 1; if (kc, kr) != missing) yield {
+        val cells = (0 until 16).map { i =>
+          v(kc * 4 + i % 4, kr * 4 + i / 4).map(d => if (int) d.toInt: Any else d: Any)
+            .getOrElse(null)
+        }
+        if (int) Row(kc, kr, cells, null) else Row(kc, kr, null, cells)
+      }
+      val schema = StructType(Seq(StructField("key_col", IntegerType),
+        StructField("key_row", IntegerType), StructField("tile_i", ArrayType(IntegerType)),
+        StructField("tile_d", ArrayType(DoubleType))))
+      Zonal.Layer(meta(id, if (int) "int" else "double"),
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+    }
+    val none = (-1, -1)
+    // double group: fractional ±values truncate toward zero; NaN and a
+    // null element read as NODATA
+    def gdV(gc: Int, gr: Int): Option[Double] =
+      if ((gc, gr) == (3, 3)) Some(Double.NaN) else if ((gc, gr) == (4, 2)) None
+      else Some((gc - 3.5) * 0.7 + (gr % 3) * 0.3)
+    // int groups, each missing one tile (full-outer NODATA fill)
+    def giV(gc: Int, gr: Int): Option[Double] =
+      if ((gc, gr) == (2, 5)) None else Some((gc % 3).toDouble)
+    def gjV(gc: Int, gr: Int): Option[Double] =
+      Some(if ((gc + gr) % 4 == 0) NoData.INT.toDouble else (gr % 2).toDouble)
+    // int target with NODATA cells, a null element and a missing tile
+    def tiV(gc: Int, gr: Int): Option[Double] =
+      if ((gc, gr) == (6, 6)) None
+      else Some(if (gc * gr % 5 == 0) NoData.INT.toDouble else (gc * 10 + gr).toDouble)
+    val gd = memLayer("gd", int = false, none)(gdV)
+    val gi = memLayer("gi", int = true, (1, 0))(giV)
+    val gj = memLayer("gj", int = true, (0, 1))(gjV)
+    val ti = memLayer("ti", int = true, (1, 1))(tiV)
+
+    // the reference's read rules, applied here outside Spark
+    def tile(gc: Int, gr: Int) = (gc / 4, gr / 4)
+    def group(v: (Int, Int) => Option[Double], missing: (Int, Int))(gc: Int, gr: Int): Int =
+      if (tile(gc, gr) == missing) NoData.INT
+      else v(gc, gr).filterNot(_.isNaN).map(_.toInt).getOrElse(NoData.INT)
+    def targetOf(gc: Int, gr: Int): Double =
+      if (tile(gc, gr) == (1, 1)) Double.NaN
+      else tiV(gc, gr).filter(_.toInt != NoData.INT).getOrElse(Double.NaN)
+    val groupsOf = Seq[(Int, Int) => Int](group(gdV, none), group(giV, (1, 0)),
+      group(gjV, (0, 1)))
+    val masked = for (gc <- 1 to 6; gr <- 1 to 6) yield (gc, gr)
+    def key(n: Int)(gc: Int, gr: Int) = Render.listKey(groupsOf.take(n).map(_(gc, gr)))
+
+    // counts for the Long-packed keys (1 and 2 groups) and the wide
+    // key path (3 groups)
+    Seq(1, 2, 3).foreach { n =>
+      val got = Render.toResultInt(
+        Zonal.groupedCount(spark, layout, Seq(gd, gi, gj).take(n), aoi))
+      val want = masked.groupBy { case (gc, gr) => key(n)(gc, gr) }.map { case (k, v) => k -> v.size }
+      assert(got == want, s"$n groups")
+    }
+    assert(groupsOf.head(1, 1) == -1 && groupsOf.head(6, 1) == 2) // truncation toward zero
+
+    // average: NODATA targets count as 0.0 in the mean but add nothing
+    val avg = Render.toResultDouble(Zonal.groupedAverage(spark, layout, Seq(gd), ti, aoi))
+    val wantAvg = masked.groupBy { case (gc, gr) => key(1)(gc, gr) }.map { case (k, cs) =>
+      k -> cs.map { case (gc, gr) => targetOf(gc, gr) }.filterNot(_.isNaN).sum / cs.size
+    }
+    assert(avg.keySet == wantAvg.keySet)
+    wantAvg.foreach { case (k, v) => assert(math.abs(avg(k) - v) < 1e-9, k) }
+    assert(masked.exists { case (gc, gr) => targetOf(gc, gr).isNaN })
   }
 }

@@ -1,7 +1,9 @@
 package graft.raster
 
+import org.scalacheck.{Gen, Prop, Test}
 import org.scalatest.funsuite.AnyFunSuite
-import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
+import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory, LineString, LinearRing,
+  MultiPolygon, Polygon}
 
 import Rasterizer.Options
 
@@ -221,5 +223,179 @@ class RasterizerSpec extends AnyFunSuite {
         assert(got == want, s"trial $trial hull=$hull")
       }
     }
+  }
+
+  // ---- differential properties of the active-edge scanline ----
+
+  /** The scanline as it was before its active-edge rewrite: every
+    * edge tested against every row, crossings boxed and sorted with
+    * `xs.sorted`. Kept, logic unchanged, as the oracle for the rewrite.
+    */
+  private def legacyScanlineCenters(polys: Seq[Polygon], re: RasterExtent)
+                                   (f: (Int, Int) => Unit): Unit = {
+    val edges = new scala.collection.mutable.ArrayBuffer[(Double, Double, Double, Double)]
+    var ymin = Double.MaxValue
+    var ymax = Double.MinValue
+    polys.foreach { p =>
+      rings(p).foreach { ring =>
+        val cs = ring.getCoordinates
+        var i = 0
+        while (i < cs.length - 1) {
+          val a = cs(i); val b = cs(i + 1)
+          if (a.y != b.y) edges += ((a.x, a.y, b.x, b.y))
+          ymin = math.min(ymin, math.min(a.y, b.y))
+          ymax = math.max(ymax, math.max(a.y, b.y))
+          i += 1
+        }
+      }
+    }
+    if (edges.isEmpty) return
+    val r0 = math.max(0, re.mapYToGrid(ymax))
+    val r1 = math.min(re.rows - 1, re.mapYToGrid(ymin))
+    val xs = new scala.collection.mutable.ArrayBuffer[Double]
+    var r = r0
+    while (r <= r1) {
+      val y = re.rowCenter(r)
+      xs.clear()
+      edges.foreach { case (x1, y1, x2, y2) =>
+        val (ylo, yhi, xlo, xhi) = if (y1 < y2) (y1, y2, x1, x2) else (y2, y1, x2, x1)
+        if (y >= ylo && y < yhi)
+          xs += xlo + (y - ylo) / (yhi - ylo) * (xhi - xlo)
+      }
+      val sorted = xs.sorted
+      var i = 0
+      while (i + 1 < sorted.length) {
+        val xEnter = sorted(i)
+        val xExit = sorted(i + 1)
+        var c = math.max(0, math.ceil((xEnter - re.extent.xmin) / re.cellW - 0.5).toInt)
+        val cEnd = math.min(re.cols - 1,
+          math.ceil((xExit - re.extent.xmin) / re.cellW - 0.5).toInt - 1)
+        while (c <= cEnd) {
+          f(c, r)
+          c += 1
+        }
+        i += 2
+      }
+      r += 1
+    }
+  }
+
+  private def rings(p: Polygon): Seq[LineString] =
+    p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN)
+
+  private def polygons(g: Geometry): Seq[Polygon] =
+    (0 until g.getNumGeometries).map(g.getGeometryN(_).asInstanceOf[Polygon]).filterNot(_.isEmpty)
+
+  private def visits(run: ((Int, Int) => Unit) => Unit): Seq[(Int, Int)] = {
+    val b = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    run((c, r) => b += ((c, r)))
+    b.toSeq
+  }
+
+  /** Tiles the properties rasterize on: unit cells, and cells whose
+    * size and origin are not binary fractions.
+    */
+  private val genTile: Gen[RasterExtent] = Gen.oneOf(
+    RasterExtent(Extent(0, 0, 8, 8), 8, 8),
+    RasterExtent(Extent(0, 0, 8, 8), 6, 7),
+    RasterExtent(Extent(-0.3, 0.1, 7.7, 8.1), 10, 9))
+
+  /** A star-shaped ring around (cx, cy): 6–14 vertices at jittered,
+    * evenly spread angles and radii in [rmin, rmax], closed. With
+    * `snap`, every vertex is rounded to the half-unit grid, which puts
+    * vertices on row centers and cell edges and makes runs of equal y
+    * (horizontal edges); `flat` also copies some vertices' y from their
+    * predecessor.
+    */
+  private def genRing(cx: Double, cy: Double, rmin: Double, rmax: Double,
+                      snap: Boolean): Gen[Array[Coordinate]] = for {
+    k <- Gen.choose(6, 14)
+    jitter <- Gen.listOfN(k, Gen.choose(-0.3, 0.3))
+    radii <- Gen.listOfN(k, Gen.choose(rmin, rmax))
+    flat <- Gen.listOfN(k, Gen.choose(0, 5))
+  } yield {
+    def q(v: Double) = if (snap) math.rint(v * 2) / 2 else v
+    val pts = new Array[Coordinate](k)
+    for (i <- 0 until k) {
+      val a = (i + jitter(i)) * 2 * math.Pi / k
+      val y = if (i > 0 && flat(i) == 0) pts(i - 1).y else q(cy + radii(i) * math.sin(a))
+      pts(i) = new Coordinate(q(cx + radii(i) * math.cos(a)), y)
+    }
+    pts :+ pts(0).copy()
+  }
+
+  /** A star polygon, with a hole half as wide as its shell or none. */
+  private def genPolygon(cx: Double, cy: Double, rmin: Double, rmax: Double,
+                         snap: Boolean): Gen[Polygon] = for {
+    shell <- genRing(cx, cy, rmin, rmax, snap)
+    holed <- Gen.oneOf(true, false)
+    hole <- genRing(cx, cy, rmin * 0.2, rmin * 0.5, snap)
+  } yield gf.createPolygon(gf.createLinearRing(shell),
+    if (holed) Array(gf.createLinearRing(hole)) else Array.empty[LinearRing])
+
+  /** Multipolygons that span the tile's edges: one large shape around
+    * the tile's middle, or 1–3 shapes around distinct tile corners.
+    * `snap` picks whether vertices are rounded to the half-unit grid.
+    */
+  private def genShape(snap: Gen[Boolean]): Gen[MultiPolygon] = for {
+    snapped <- snap
+    polys <- Gen.oneOf(
+      for {
+        cx <- Gen.choose(2.0, 6.0); cy <- Gen.choose(2.0, 6.0)
+        p <- genPolygon(cx, cy, 2.0, 7.0, snapped)
+      } yield Seq(p),
+      for {
+        corners <- Gen.atLeastOne(Seq((0.0, 0.0), (8.0, 0.0), (0.0, 8.0), (8.0, 8.0)))
+        ps <- Gen.sequence[Seq[Polygon], Polygon](corners.take(3).map { case (x, y) =>
+          for {
+            dx <- Gen.choose(-0.7, 0.7); dy <- Gen.choose(-0.7, 0.7)
+            p <- genPolygon(x + dx, y + dy, 1.2, 3.2, snapped)
+          } yield p
+        })
+      } yield ps)
+  } yield gf.createMultiPolygon(polys.toArray)
+
+  private def check(prop: Prop): Unit = {
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(1000), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("property: active-edge scanline visits exactly what the per-row edge scan visited") {
+    check(Prop.forAll(genShape(Gen.oneOf(true, false)), genTile) { (g, re) =>
+      val got = visits(f => Rasterizer.foreachCellByPolygon(g, re)(f))
+      val want = visits(f => legacyScanlineCenters(polygons(g), re)(f))
+      Prop(got == want) :| s"re=$re g=$g"
+    })
+  }
+
+  /** The clip done as the oracle fixtures do it (ZonalFixture.clipTile). */
+  private def clipTile(g: Geometry, re: RasterExtent): Geometry =
+    try g.intersection(g.getFactory.toGeometry(re.extent.toEnvelope))
+    catch { case _: Exception => g }
+
+  test("property: center sampling of a shape equals center sampling of its tile clip") {
+    // Off exact ties the clip cannot move a center-sampled cell, so the
+    // kernel skips it. Vertices are not snapped here: snapped vertices
+    // put cell centers exactly on edges, and there the clip's rounded
+    // new vertices may land a crossing on either side of the center
+    // (pinned by the next test).
+    check(Prop.forAll(genShape(Gen.const(false)).suchThat(_.isValid), genTile) { (g, re) =>
+      val unclipped = visits(f => Rasterizer.foreachCellByPolygon(g, re)(f))
+      val clipped = visits(f => Rasterizer.foreachCellByPolygon(clipTile(g, re), re)(f))
+      Prop(unclipped == clipped) :| s"re=$re g=$g"
+    })
+  }
+
+  test("a center exactly on a right edge stays out unclipped, where the clip rounds it in") {
+    // edge (8, 3.5)-(3, 5.5) passes exactly through the center (6.5, 4.1)
+    // of cell (8, 4); the half-open rule leaves a right-edge center out
+    val g = new org.locationtech.jts.io.WKTReader().read(
+      "POLYGON ((5.5 3.5, 8 3.5, 3 5.5, 1 8.5, -2.5 6, -0.5 2.5, -0.5 -0.5, " +
+        "2.5 -1.5, 6.5 -1.5, 5.5 3.5))")
+    val re = RasterExtent(Extent(-0.3, 0.1, 7.7, 8.1), 10, 9)
+    val unclipped = visits(f => Rasterizer.foreachCellByPolygon(g, re)(f)).toSet
+    val clipped = visits(f => Rasterizer.foreachCellByPolygon(clipTile(g, re), re)(f)).toSet
+    assert(!unclipped.contains((8, 4)))
+    assert(clipped -- unclipped == Set((8, 4)) && unclipped.subsetOf(clipped))
   }
 }

@@ -35,6 +35,7 @@ class GraftInstallSpec extends AnyFunSuite with SparkSpec {
     // must NOT add a second active copy via extraOptimizations…
     graft.GraftSession.tune(s2)
     assert(s2.experimental.extraOptimizations.count(_ == DotProductRewriteRule) == 0)
+    assert(!s2.experimental.extraStrategies.contains(_root_.graft.operators.ZonalPlaneStrategy))
     // …and the rewrite still fires (via the injected copy)
     val naive = s2.range(1)
       .selectExpr("array(cast(id AS DOUBLE), 2.0D) AS a", "array(3.0D, 4.0D) AS b")
