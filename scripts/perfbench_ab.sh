@@ -12,9 +12,12 @@
 # For seeds 1-3 and the workloads huc8_run and huc12_http it runs
 #   python3 perfbench/run.py --workload W --seed N --seconds 25
 # in the parent, then in the change, alternating, and keeps each result
-# line as <out-dir>/<side>-<W>-<N>.json. It then prints, per workload and
-# side, the median of every end-to-end metric, and exits non-zero if a run
-# failed or reported `correct: false`. Temporary files go under <out-dir>.
+# line as <out-dir>/<side>-<W>-<N>.json. It then prints each run's
+# latency_p50_ms with the host CPU steal the run saw (detail.cpu_steal_pct,
+# the second-to-last stdout line), flags every pair where either side saw
+# at least 5% steal, and prints, per workload and side, the median of every
+# end-to-end metric. It exits non-zero if a run failed or reported
+# `correct: false`. Temporary files go under <out-dir>.
 set -uo pipefail
 if [ $# -lt 2 ] || [ $# -gt 3 ]; then
   echo "usage: $0 <parent-rev> <out-dir> [<change-rev>]" >&2; exit 2
@@ -52,7 +55,18 @@ done
 python3 - "$out" <<'EOF' || failed=1
 import glob, json, os, statistics, sys
 out = sys.argv[1]
-bad, rows = 0, {}
+STEAL_PCT = 5.0  # a pair where either side saw this much host steal is suspect
+nan = float("nan")
+
+def steal(side, w, seed):
+    """detail.cpu_steal_pct from the run's second-to-last stdout line."""
+    try:
+        with open(os.path.join(out, f"{side}-{w}-{seed}.out")) as f:
+            return json.loads(f.read().splitlines()[-2])["detail"]["cpu_steal_pct"]
+    except (OSError, IndexError, KeyError, ValueError):
+        return nan
+
+bad, rows, runs = 0, {}, {}
 for path in sorted(glob.glob(os.path.join(out, "*-*-*.json"))):
     side, w, seed = os.path.basename(path)[:-5].rsplit("-", 2)
     r = json.load(open(path))
@@ -61,6 +75,15 @@ for path in sorted(glob.glob(os.path.join(out, "*-*-*.json"))):
         bad = 1
     for k, v in r["metrics"].items():
         rows.setdefault((w, k), {}).setdefault(side, []).append(v["value"])
+    p50 = r["metrics"].get("latency_p50_ms", {}).get("value", nan)
+    runs.setdefault((w, int(seed)), {})[side] = (p50, steal(side, w, seed))
+print(f"{'workload':<11} {'seed':>4} {'parent p50':>11} {'steal%':>7} {'change p50':>11} {'steal%':>7}")
+for (w, seed), by in sorted(runs.items()):
+    p, c = by.get("parent", (nan, nan)), by.get("change", (nan, nan))
+    flag = "  STEAL" if p[1] >= STEAL_PCT or c[1] >= STEAL_PCT else ""
+    print(f"{w:<11} {seed:>4} {p[0]:>11.1f} {p[1]:>7.1f} {c[0]:>11.1f} {c[1]:>7.1f}{flag}")
+print(f"(STEAL: either side saw >= {STEAL_PCT:.0f}% host CPU steal)")
+print()
 print(f"{'workload':<11} {'metric':<15} {'parent':>10} {'change':>10} {'change/parent':>14}")
 for (w, k), by in sorted(rows.items()):
     p = statistics.median(by.get("parent", [float("nan")]))

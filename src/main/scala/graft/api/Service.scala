@@ -60,9 +60,22 @@ object Service {
 
   private implicit val fmts: Formats = DefaultFormats
 
-  /** A catalog handle: where the tiles table lives. */
+  /** A catalog handle: a snapshot of the catalog under `path`, taken on
+    * first use. `meta.json` is read and the tiles table opened once, and
+    * every request's layers share that one relation, so a request runs
+    * no file listing and no schema inference. Writes made after the
+    * first use stay invisible: build a new `Catalog` to see them.
+    */
   final case class Catalog(spark: SparkSession, path: String) {
-    lazy val metas: Map[String, TileCatalog.RasterMeta] = TileCatalog.readMeta(path)
+    // meta.json is read BEFORE the tiles are listed. Writers append a
+    // raster's tiles before they rewrite meta.json, so every raster in
+    // the snapshot's metas has its tiles in the snapshot's listing.
+    private lazy val snapshot = {
+      val metas = TileCatalog.readMeta(path)
+      (metas, TileCatalog.open(spark, path))
+    }
+
+    def metas: Map[String, TileCatalog.RasterMeta] = snapshot._1
 
     /** Per-zoom meta resolution (reference Utils.scala:50-57 builds
       * `LayerId(rasterId, zoom)` from the request): no requested zoom ⇒
@@ -84,7 +97,7 @@ object Service {
                zoom: Option[Int] = None): Seq[Zonal.Layer] =
       ids.map { id =>
         val m = meta(id, zoom)
-        Zonal.Layer(m, TileCatalog.readLayer(spark, path, m, aoi))
+        Zonal.Layer(m, TileCatalog.layer(snapshot._2, m, aoi))
       }
 
     /** Shared layout of the request's rasters. The align join and the
@@ -163,11 +176,12 @@ object Service {
         JArray(Render.toResultManyInt(df, aois.size).map(toJ).toList)
       case "RasterGroupedAverage" =>
         val target = in.targetRaster.getOrElse(throw new MissingTargetRasterException)
+        val ids = in.rasters :+ target
+        val layout = cat.layout(ids, z)
         val aoi = aoiOf(in)
-        val groups = cat.layers(in.rasters, aoi, z)
-        val t = cat.layers(Seq(target), aoi, z).head
+        val layers = cat.layers(ids, aoi, z)
         toJD(Render.toResultDouble(
-          Zonal.groupedAverage(cat.spark, cat.layout(Seq(target), z), groups, t, aoi, o)))
+          Zonal.groupedAverage(cat.spark, layout, layers.init, layers.last, aoi, o)))
       case "RasterSummary" =>
         val aoi = aoiOf(in)
         val layers = cat.layers(in.rasters, aoi, z)

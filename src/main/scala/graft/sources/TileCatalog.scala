@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.json4s._
 import org.json4s.jackson.{JsonMethods, Serialization}
 import org.locationtech.jts.geom.Geometry
@@ -130,7 +131,7 @@ object TileCatalog {
     val tr = meta.tileRows
     val half = tc / 2
     val halfR = tr / 2
-    val src = spark.read.parquet(s"$path/tiles")
+    val src = open(spark, path)
       .filter(col("raster_id") === meta.rasterId && col("zoom") === meta.zoom)
     // child (kc,kr) lands in parent (kc/2, kr/2) quadrant (kc%2, kr%2);
     // parent cell (c,r) of quadrant (qx,qy) samples child cell (2c,2r)
@@ -250,18 +251,41 @@ object TileCatalog {
       .parquet(s"$path/tiles")
   }
 
-  /** Spatially-pruned layer scan (reference `fetchCroppedLayer`,
-    * Utils.scala:241-248): partition-prunes on raster_id/zoom and
-    * range-filters the key bbox derived from the AOI envelope — both
-    * predicates show up as `PushedFilters`/partition filters in the
-    * physical plan.
+  /** The tiles table's schema, partition columns last. Reading with it
+    * skips Parquet schema inference (one Spark job per open) and
+    * partition type inference, which types `raster_id` as a decimal
+    * when every id in a catalog looks numeric, so raster `7` would read
+    * the tiles of `007` as well.
     */
-  def readLayer(spark: SparkSession, path: String, meta: RasterMeta,
-                aoi: Geometry): DataFrame = {
+  val tilesSchema: StructType = StructType.fromDDL(
+    "key_col INT, key_row INT, tile_i ARRAY<INT>, tile_d ARRAY<DOUBLE>, raster_id STRING, zoom INT")
+
+  /** Open the tiles table under `path`. This lists its files once, into
+    * the relation's file index; every [[layer]] over the returned
+    * DataFrame reuses that listing, and sees no tiles written later.
+    */
+  def open(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(tilesSchema).parquet(s"$path/tiles")
+
+  /** Spatially-pruned layer scan over opened tiles (reference
+    * `fetchCroppedLayer`, Utils.scala:241-248): partition-prunes on
+    * raster_id/zoom and range-filters the key bbox derived from the AOI
+    * envelope — both predicates show up as `PushedFilters`/partition
+    * filters in the physical plan. Builds a plan only; runs no job.
+    */
+  def layer(tiles: DataFrame, meta: RasterMeta, aoi: Geometry): DataFrame = {
     val (c0, c1, r0, r1) = meta.layout.keyRange(aoi)
-    spark.read.parquet(s"$path/tiles")
+    tiles
       .filter(col("raster_id") === meta.rasterId && col("zoom") === meta.zoom)
       .filter(col("key_col").between(c0, c1) && col("key_row").between(r0, r1))
       .select(col("key_col"), col("key_row"), col("tile_i"), col("tile_d"))
   }
+
+  /** One-off [[layer]] scan: opens the catalog (one listing) for this
+    * layer alone. A long-lived reader opens once and calls [[layer]],
+    * as `Service.Catalog` does.
+    */
+  def readLayer(spark: SparkSession, path: String, meta: RasterMeta,
+                aoi: Geometry): DataFrame =
+    layer(open(spark, path), meta, aoi)
 }

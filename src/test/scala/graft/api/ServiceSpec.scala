@@ -1,5 +1,11 @@
 package graft.api
 
+import org.apache.spark.graft.BusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -29,7 +35,12 @@ class ServiceSpec extends AnyFunSuite with SparkSpec {
     TileCatalog.writeIntLayer(spark, dir, m("nlcd", "int"), tiles((gc, _) => gc / 2))
     TileCatalog.writeIntLayer(spark, dir, m("soil", "int"), tiles((_, gr) => gr / 4))
     TileCatalog.writeDoubleLayer(spark, dir, m("slope", "double"), dtiles((gc, gr) => gc * 1.0))
-    TileCatalog.writeMeta(dir, Seq(m("nlcd", "int"), m("soil", "int"), m("slope", "double")))
+    // same extent on a 4×4 grid of 2×2 tiles: a layout no other raster shares
+    val grid2 = RasterMeta("grid2", 0, "ConusAlbers", "int", 0, 0, 8, 8, 2, 2, 4, 4)
+    TileCatalog.writeIntLayer(spark, dir, grid2,
+      for (kc <- 0 to 3; kr <- 0 to 3) yield (kc, kr, Array.fill(4)(kc)))
+    TileCatalog.writeMeta(dir,
+      Seq(m("nlcd", "int"), m("soil", "int"), m("slope", "double"), grid2))
     dir
   }
 
@@ -109,6 +120,84 @@ class ServiceSpec extends AnyFunSuite with SparkSpec {
     assert(result(0) == Map("List(0)" -> 6))
     // shape B [4,7]×[1,4]: gr 4..6 → soil=1, 9 px
     assert(result(1) == Map("List(1)" -> 9))
+  }
+
+  /** Runs `f` and counts the Spark jobs it starts. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    BusDrain.drain(sc, 30000L)
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      BusDrain.drain(sc, 30000L)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def fileIndexes(df: DataFrame): Seq[FileIndex] =
+    df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location }
+
+  test("a served catalog resolves layers with no Spark job, over one shared file index") {
+    Service.run(cat, request("RasterGroupedCount"))
+    val aoi = graft.geom.GeomOps.toAoi(aoiJson.replace("\\\"", "\""),
+      graft.geom.Projections.ConusAlbers, graft.geom.Projections.ConusAlbers)
+    val (layers, jobs) = jobsDuring(cat.layers(Seq("nlcd", "soil"), aoi))
+    assert(jobs == 0)
+    val Seq(Seq(a), Seq(b)) = layers.map(l => fileIndexes(l.df))
+    assert(a eq b)
+    // the shared relation still prunes each scan to its raster's partition
+    layers.foreach { l =>
+      val scans = l.df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+      assert(scans.size == 1)
+      assert(scans.head.partitionFilters.exists {
+        case EqualTo(a: AttributeReference, Literal(v, _)) =>
+          a.name == "raster_id" && String.valueOf(v) == l.meta.rasterId
+        case _ => false
+      })
+    }
+  }
+
+  test("RasterGroupedAverage rejects a group raster on another grid before any job") {
+    val req =
+      s"""{"input": {"operationType": "RasterGroupedAverage",
+         |  "rasters": ["grid2"], "targetRaster": "slope", "zoom": 0,
+         |  "polygonCRS": "ConusAlbers", "rasterCRS": "ConusAlbers",
+         |  "polygon": ["$aoiJson"]}}""".stripMargin
+    val (e, jobs) = jobsDuring(intercept[IllegalArgumentException](Service.run(cat, req)))
+    assert(Service.errorMessage(e).exists(_.contains("rasters must share one layout, got 2")))
+    assert(jobs == 0)
+  }
+
+  test("a catalog answers from its first-use snapshot; a new catalog sees later writes") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-api-snap").toString
+    def m(id: String) = RasterMeta(id, 0, "ConusAlbers", "int", 0, 0, 8, 8, 4, 4, 2, 2)
+    def tiles(v: Int) = for (kc <- 0 to 1; kr <- 0 to 1) yield (kc, kr, Array.fill(16)(v))
+    def reqFor(id: String) =
+      s"""{"input": {"operationType": "RasterGroupedCount",
+         |  "rasters": ["$id"], "zoom": 0,
+         |  "polygonCRS": "ConusAlbers", "rasterCRS": "ConusAlbers",
+         |  "polygon": ["$aoiJson"]}}""".stripMargin
+    def count(c: Service.Catalog, id: String) =
+      (JsonMethods.parse(Service.run(c, reqFor(id))) \ "result").extract[Map[String, Int]]
+    TileCatalog.writeIntLayer(spark, dir, m("old"), tiles(1))
+    TileCatalog.writeMeta(dir, Seq(m("old")))
+    val before = Service.Catalog(spark, dir)
+    assert(count(before, "old") == Map("List(1)" -> 36))
+
+    TileCatalog.writeIntLayer(spark, dir, m("new"), tiles(2))
+    TileCatalog.writeMeta(dir, Seq(m("old"), m("new")))
+    assert(count(before, "old") == Map("List(1)" -> 36))
+    val e = intercept[IllegalArgumentException](count(before, "new"))
+    assert(Service.errorMessage(e).contains("Unknown raster: new"))
+
+    val after = Service.Catalog(spark, dir)
+    assert(count(after, "new") == Map("List(2)" -> 36))
+    assert(count(after, "old") == Map("List(1)" -> 36))
   }
 
   test("unknown operationType raises InvalidOperationException") {

@@ -55,6 +55,23 @@ class TileCatalogSpec extends AnyFunSuite with SparkSpec {
     assert(arr == want)
   }
 
+  test("numeric-looking raster ids read only their own tiles") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-numeric-ids").toString
+    val metas = Seq("7", "007", "20", "2e1")
+      .map(RasterMeta(_, 0, "ConusAlbers", "int", 0, 0, 8, 8, 4, 4, 2, 2))
+    metas.zipWithIndex.foreach { case (m, v) =>
+      TileCatalog.writeIntLayer(spark, dir, m,
+        for (kc <- 0 to 1; kr <- 0 to 1) yield (kc, kr, Array.fill(16)(v)))
+    }
+    TileCatalog.writeMeta(dir, metas)
+    val aoi = gf.toGeometry(new org.locationtech.jts.geom.Envelope(0, 8, 0, 8))
+    metas.zipWithIndex.foreach { case (m, v) =>
+      val tiles = TileCatalog.readLayer(spark, dir, m, aoi).collect()
+      assert(tiles.length == 4, s"raster ${m.rasterId}")
+      assert(tiles.forall(_.getSeq[Int](2).forall(_ == v)), s"raster ${m.rasterId}")
+    }
+  }
+
   test("writePixels double layer NaN-fills and round-trips through summary") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-ingest-d").toString
