@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.parquet.hadoop.ParquetOutputFormat
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -31,12 +32,23 @@ import graft.raster.{Extent, Layout}
   * reference gets from `reader.query(...).where(Intersects(shape))`
   * (Utils.scala:241-248), but entirely via Catalyst.
   *
-  * Writers lay tiles out in Z-ORDER ([[graft.operators.Zorder]],
+  * Every tile is its own Parquet row group: [[appendTiles]], the one
+  * tiles writer, caps a row group at one row, so a tile is the unit of
+  * I/O, as a SpatialKey object is in the reference's GeoTrellis
+  * catalog. That has two effects. Each row group's `key_col`/`key_row`
+  * min/max stats are exactly its tile's key, so the pushed key-range
+  * filter skips every tile outside the AOI's key range. And a
+  * vectorized reader batch never spans row groups, so it holds at most
+  * one tile instead of a whole layer. A catalog written before this
+  * rule (one row group per file) reads the same rows, but its scans
+  * decode whole row groups until it is rewritten.
+  *
+  * Writers also lay tiles out in Z-ORDER ([[graft.operators.Zorder]],
   * gated q107): rows are sorted by the Morton code of
-  * (key_col, key_row) before hitting parquet, so every row group
-  * covers an aligned square-ish block with TIGHT key min/max stats —
-  * a bbox scan prunes to O(few) contiguous runs instead of one thin
-  * stripe per key_row. At fixture scale this is one in-memory sort; a
+  * (key_col, key_row) before hitting parquet, so the row groups of an
+  * aligned square-ish block of tiles are adjacent in their file and a
+  * bbox scan reads O(few) contiguous runs instead of one thin stripe
+  * per key_row. At fixture scale this is one in-memory sort; a
   * 100 TB ingest would `repartitionByRange` on the same code first
   * (one range shuffle at write time, prepaying every later scan).
   */
@@ -75,11 +87,11 @@ object TileCatalog {
 
   /** Z-order the tile rows before writing (see object scaladoc):
     * range-partition on the Morton code FIRST, then sort within
-    * partitions — so every output file covers one contiguous,
-    * non-overlapping z-range with tight min/max stats. Without the
-    * range exchange a multi-partition input yields per-file ordering
-    * but overlapping z-ranges across files, and row-group pruning
-    * loses most of its selectivity (ADVICE r4).
+    * partitions, so each file's tiles follow Z order. Without the range
+    * exchange a multi-partition input would give each file overlapping
+    * z-ranges. A small layer's range partitions are coalesced by AQE,
+    * so it lands in one file whose per-tile row groups carry the
+    * pruning stats.
     */
   private def zSorted(df: DataFrame): DataFrame =
     df.withColumn("__z",
@@ -88,29 +100,36 @@ object TileCatalog {
       .sortWithinPartitions("__z")
       .drop("__z")
 
+  /** Append tiles (`key_col`, `key_row`, `tile_i`, `tile_d`) as one
+    * (raster, zoom) to the tiles table under `path`, Z-sorted, one
+    * Parquet row group per tile (see object scaladoc). The row-group cap
+    * is a write option, so it reaches only this writer. Every tiles
+    * writer goes through here.
+    */
+  private def appendTiles(tiles: DataFrame, path: String, rasterId: String, zoom: Int): Unit =
+    zSorted(tiles
+        .withColumn("raster_id", lit(rasterId))
+        .withColumn("zoom", lit(zoom))
+        .select(tilesSchema.fieldNames.toIndexedSeq.map(col): _*))
+      .write.mode("append")
+      .option(ParquetOutputFormat.BLOCK_ROW_COUNT_LIMIT, 1)
+      .partitionBy("raster_id", "zoom")
+      .parquet(s"$path/tiles")
+
   /** Ingest one int-typed raster layer (tests / fixtures). */
   def writeIntLayer(spark: SparkSession, path: String, meta: RasterMeta,
                     tiles: Seq[(Int, Int, Array[Int])]): Unit = {
     import spark.implicits._
-    zSorted(tiles.toDF("key_col", "key_row", "tile_i")
-        .withColumn("tile_d", lit(null).cast("array<double>"))
-        .withColumn("raster_id", lit(meta.rasterId))
-        .withColumn("zoom", lit(meta.zoom)))
-      .write.mode("append").partitionBy("raster_id", "zoom")
-      .parquet(s"$path/tiles")
+    appendTiles(tiles.toDF("key_col", "key_row", "tile_i")
+        .withColumn("tile_d", lit(null).cast("array<double>")), path, meta.rasterId, meta.zoom)
   }
 
   /** Ingest one double-typed raster layer. */
   def writeDoubleLayer(spark: SparkSession, path: String, meta: RasterMeta,
                        tiles: Seq[(Int, Int, Array[Double])]): Unit = {
     import spark.implicits._
-    zSorted(tiles.toDF("key_col", "key_row", "tile_d")
-        .withColumn("tile_i", lit(null).cast("array<int>"))
-        .withColumn("raster_id", lit(meta.rasterId))
-        .withColumn("zoom", lit(meta.zoom))
-        .select("key_col", "key_row", "tile_i", "tile_d", "raster_id", "zoom"))
-      .write.mode("append").partitionBy("raster_id", "zoom")
-      .parquet(s"$path/tiles")
+    appendTiles(tiles.toDF("key_col", "key_row", "tile_d")
+        .withColumn("tile_i", lit(null).cast("array<int>")), path, meta.rasterId, meta.zoom)
   }
 
   /** Build the next overview level (zoom+1 = 2× downsample, nearest
@@ -180,12 +199,7 @@ object TileCatalog {
           }.toDF("key_col", "key_row", "tile_d")
           .withColumn("tile_i", lit(null).cast("array<int>"))
       }
-    zSorted(out
-        .withColumn("raster_id", lit(meta.rasterId))
-        .withColumn("zoom", lit(meta.zoom + 1))
-        .select("key_col", "key_row", "tile_i", "tile_d", "raster_id", "zoom"))
-      .write.mode("append").partitionBy("raster_id", "zoom")
-      .parquet(s"$path/tiles")
+    appendTiles(out, path, meta.rasterId, meta.zoom + 1)
     meta.copy(zoom = meta.zoom + 1,
       layoutCols = meta.layoutCols / 2, layoutRows = meta.layoutRows / 2)
   }
@@ -243,12 +257,7 @@ object TileCatalog {
           fill(key, it, arr, (i, v) => arr(i) = v)
         }.toDF("key_col", "key_row", "tile_d")
           .withColumn("tile_i", lit(null).cast("array<int>"))
-    zSorted(out
-        .withColumn("raster_id", lit(meta.rasterId))
-        .withColumn("zoom", lit(meta.zoom))
-        .select("key_col", "key_row", "tile_i", "tile_d", "raster_id", "zoom"))
-      .write.mode("append").partitionBy("raster_id", "zoom")
-      .parquet(s"$path/tiles")
+    appendTiles(out, path, meta.rasterId, meta.zoom)
   }
 
   /** The tiles table's schema, partition columns last. Reading with it
