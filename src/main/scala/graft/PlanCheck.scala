@@ -167,7 +167,7 @@ object PlanCheck {
     * allowlist but its plan no longer contains an unpartitioned
     * window — the justification has rotted and must be deleted,
     * otherwise a later reintroduction would be silently auto-excused.
-    * Treated as a failure by both the CLI and Round10Spec so the
+    * Treated as a failure by both the CLI and PlanCheckSpec so the
     * allowlist stays minimal. A CartesianProduct has no allowlist: it
     * always fails.
     */
@@ -179,7 +179,7 @@ object PlanCheck {
     * die first at 100 TB: unpartitioned windows (single-task global
     * sort) and CartesianProduct joins (all-pairs over unbounded
     * inputs). Pure: returns the verdicts; the CLI prints them,
-    * `Round10Spec` asserts none are bad — so a new gate with either
+    * `PlanCheckSpec` asserts none are bad — so a new gate with either
     * shape fails `sbt test`, not just a manual run. Run on the
     * sf0.001 fixture so eager constructions stay cheap.
     */
@@ -293,7 +293,6 @@ object PlanCheck {
     // q454's registered query materializes its 4 star rounds during
     // construction; the assertable per-round rewrite is rebuilt lazily
     "q454_star_round" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
       val docs = Tables.load(s, dir, "documents")
       val edges = pipeline.Dedup.minhashLshPairs(docs, "doc_id", "text",
         n = 3, numHashes = 12, bands = 4)
@@ -309,7 +308,7 @@ object PlanCheck {
     * unions (a per-shape rescan/loop would multiply scan nodes 8×
     * here and 1000× on a real watershed batch), and the census must
     * contain a Union. CartesianProduct is forbidden as everywhere else.
-    * Returns the problems found; Round9Spec asserts there are none.
+    * Returns the problems found; PlanCheckSpec asserts there are none.
     */
   private[graft] def zonalMultiCheck(
       s: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
@@ -367,12 +366,12 @@ object PlanCheck {
     val input = all.filter(col("doc_id") % 100 =!= 0)
       .select(col("doc_id"), col("text"))
     val bench = all.filter(col("doc_id") % 100 === 0)
-    val s1 = SparkEntry.corpusStageExact(input)
+    val s1 = gates.DedupGates.corpusStageExact(input)
     val stages = Seq(
       "exact" -> s1,
-      "neardup" -> SparkEntry.corpusStageNearDup(s1),
-      "quality" -> SparkEntry.corpusStageQuality(input),
-      "contamination" -> SparkEntry.corpusStageContamination(input, bench))
+      "neardup" -> gates.DedupGates.corpusStageNearDup(s1),
+      "quality" -> gates.DedupGates.corpusStageQuality(input),
+      "contamination" -> gates.DedupGates.corpusStageContamination(input, bench))
     stages.flatMap { case (name, df) =>
       val plan = df.queryExecution.explainString(FormattedMode)
       (if (plan.contains("CartesianProduct"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -19,7 +18,7 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet
     // the zonal oracle SQL derives its fixture path from the sfDir
-    // this run computes against (SparkEntry.zfp)
+    // this run computes against (RasterGates.zfp)
     sys.props("graft.verify.sfdir") = sfDir
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)

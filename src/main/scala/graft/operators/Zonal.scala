@@ -423,9 +423,8 @@ object Zonal {
                  aois: Seq[MultiPolygon],
                  lines: Seq[MultiLineString],
                  ops: Seq[BatchOp]): DataFrame = {
-    val keyExpr = expr("concat('List(', array_join(transform(vals, v -> cast(v as string)), ', '), ')')")
     def tagged(df: DataFrame, label: String, v: String): DataFrame =
-      df.select(col("shape_id"), lit(label).as("op_label"), keyExpr.as("k"),
+      df.select(col("shape_id"), lit(label).as("op_label"), Render.listKeyCol.as("k"),
         col(v).cast("double").as("v"))
     ops.map {
       case BatchCount(label, rasters, o) =>
@@ -446,6 +445,14 @@ object Zonal {
   */
 object Render {
   def listKey(vals: Seq[Int]): String = vals.mkString("List(", ", ", ")")
+
+  /** [[listKey]] as a SQL column over an array column `vals`. It also
+    * keeps zonal outputs scalar-typed: the driver's rows-only check
+    * reads result parquet with pandas, which cannot sort or hash
+    * array-typed cells.
+    */
+  val listKeyCol: Column =
+    expr("concat('List(', array_join(transform(vals, v -> cast(v as string)), ', '), ')')")
 
   def toResultInt(df: DataFrame): Map[String, Int] =
     df.collect().map(r => listKey(r.getSeq[Int](0)) -> r.getLong(1).toInt).toMap

@@ -54,7 +54,7 @@ object Curation {
     * in one scan; language argmax (same strictly-greater fold, same
     * declaration-order tie-break as [[TextAnalysis.languageId]]) and
     * the keep rule are then plain arithmetic over those counts —
-    * value-identical, spec-pinned in Round14Spec.
+    * value-identical, spec-pinned in TextKernelsSpec.
     */
   private val wordSetSpec: String =
     (TextAnalysis.defaultMarkers.map(_._2.mkString(",")) :+

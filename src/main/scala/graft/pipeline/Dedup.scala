@@ -304,7 +304,7 @@ object Dedup {
     * [[minhashMergeDelta]] — the delta's shingle+minhash pass ran
     * TWICE per batch). Verdicts are a pure function of the bucket
     * rows, so feeding the same table yields bit-identical verdicts
-    * (spec-pinned in Round15Spec). `deltaBuckets` must be materialized
+    * (spec-pinned in DedupSpec). `deltaBuckets` must be materialized
     * (checkpointed/persisted) by the caller — it is consumed three
     * times below.
     */

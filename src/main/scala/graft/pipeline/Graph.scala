@@ -113,7 +113,6 @@ object Graph {
                           localEdgeThreshold: Long = DefaultLocalEdgeThreshold)
       : DataFrame = {
     val spark = nodes.sparkSession
-    import spark.implicits._
     val adj = edges
       .select(least(col(aCol), col(bCol)).cast("long").as("src"),
         greatest(col(aCol), col(bCol)).cast("long").as("dst"))

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sequence packing: concatenating documents into fixed-size context

@@ -116,7 +116,7 @@ object TextAnalysis {
     // and shuffled position-level rows; the kernel emits the distinct
     // (bg, c) pairs per doc directly, so the (doc, bg) aggregation —
     // the corpus-sized shuffle — disappears from the plan entirely.
-    // Value-identical (spec-pinned in Round14Spec): same code-point
+    // Value-identical (spec-pinned in TextKernelsSpec): same code-point
     // bigrams, exact byte-compare counting, NULL/<2-char text → no rows
     // (the CASE's else branch).
     val docBi = Par.spread(df).select(col(idCol).as("doc"),
@@ -152,7 +152,7 @@ object TextAnalysis {
     // returns struct(n_tokens, n_distinct, n_bigrams, top_c) with
     // exact byte-compare distinct/count tables, so the plan is now
     // map-only (zero shuffle at any corpus size). Value identity is
-    // spec-pinned in Round14Spec: n_bigrams/top_c are NULL for
+    // spec-pinned in TextKernelsSpec: n_bigrams/top_c are NULL for
     // <2-token docs exactly like the left-join miss, so the
     // coalesce(…, 0.0) finish is byte-identical.
     val st = Par.spread(df).select(col(idCol).as("doc"),
@@ -271,7 +271,7 @@ object TextAnalysis {
     // ([[org.apache.spark.sql.graft.TextStatsKernel.tokenCounts]]), so
     // the corpus count is sum(c) over per-doc-distinct rows — the same
     // integers the raw explode + count produced. Spec-pinned in
-    // Round14Spec.
+    // TextKernelsSpec.
     val bigrams = df.select(
       explode(call_function("graft_word_bigrams", col(textCol))).as("bg"))
       .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))

@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.parquet.hadoop.ParquetOutputFormat
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetOutputFormat}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -115,6 +117,25 @@ object TileCatalog {
       .option(ParquetOutputFormat.BLOCK_ROW_COUNT_LIMIT, 1)
       .partitionBy("raster_id", "zoom")
       .parquet(s"$path/tiles")
+
+  /** Row count of every Parquet row group of one (raster, zoom): all 1
+    * for a layer [[appendTiles]] wrote, larger for the layout written
+    * before tiles became row groups.
+    */
+  private[graft] def rowGroupRows(spark: SparkSession, dir: String, rasterId: String,
+                                  zoom: Int): Seq[Long] = {
+    val conf = spark.sessionState.newHadoopConf()
+    new java.io.File(s"$dir/tiles/raster_id=$rasterId/zoom=$zoom").listFiles()
+      .filter(_.getName.endsWith(".parquet")).toSeq
+      .flatMap { f =>
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new Path(f.getPath), conf))
+        try {
+          val groups = reader.getRowGroups
+          (0 until groups.size).map(groups.get(_).getRowCount)
+        } finally reader.close()
+      }
+  }
 
   /** Ingest one int-typed raster layer (tests / fixtures). */
   def writeIntLayer(spark: SparkSession, path: String, meta: RasterMeta,

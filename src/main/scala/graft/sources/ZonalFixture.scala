@@ -130,14 +130,15 @@ object ZonalFixture {
   def ensure(spark: SparkSession, sfDir: String): String =
     ensureSpec(spark, specFor(sfDir))
 
-  /** Same build for an EXPLICIT spec (the sf1 scale rehearsal grows the
-    * layout past what any sfDir names — e.g. 20×12×512² = exactly 10×
-    * the sf0.1 pixel count). Tile dir is keyed by the spec, so scaled
-    * fixtures coexist with the gate fixtures.
+  /** Same build for an EXPLICIT spec (perfbench's catalog names its own
+    * layout). Tile dir is keyed by the spec, so fixtures of different
+    * specs coexist. A catalog there is reused only when it is complete
+    * (`meta.json`) and not in a [[staleLayout]].
     */
   def ensureSpec(spark: SparkSession, spec: Spec): String = synchronized {
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_zonal_${spec.layoutCols}x${spec.layoutRows}x${spec.tileSize}"
-    if (new java.io.File(s"$dir/meta.json").exists()) return dir
+    if (new java.io.File(s"$dir/meta.json").exists() && !staleLayout(spark, dir, spec))
+      return dir
     // a crashed partial build would re-append tiles on retry (writers
     // use append mode) and silently double every count — build fresh
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
@@ -159,6 +160,14 @@ object ZonalFixture {
     TileCatalog.writeMeta(dir, metas(spec))
     dir
   }
+
+  /** True when some layer of the catalog under `dir` has a Parquet row
+    * group of more than one row: it was written before every tile became
+    * its own row group, and reads whole layers per batch.
+    */
+  private[graft] def staleLayout(spark: SparkSession, dir: String, spec: Spec): Boolean =
+    metas(spec).exists(m =>
+      TileCatalog.rowGroupRows(spark, dir, m.rasterId, m.zoom).exists(_ > 1))
 
   /** Mask dumps for the DuckDB correctness oracle: the rasterized cell
     * sets of every geometry the zonal gate queries use, as parquet next

@@ -11,7 +11,6 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.SparkSpec
-import graft.raster.NoData
 import graft.sources.TileCatalog
 import graft.sources.TileCatalog.RasterMeta
 

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class DotProductSpec extends AnyFunSuite with SparkSpec {

@@ -25,7 +25,6 @@ class SkewJoinSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("saltedSumCount equals direct aggregation") {
-    import spark.implicits._
     val df = spark.range(5000).select((col("id") % 3).as("k"), col("id").as("v"))
     val direct = df.groupBy("k").agg(sum("v").as("sum_v"), count(lit(1)).as("cnt"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

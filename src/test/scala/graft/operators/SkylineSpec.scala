@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class SkylineSpec extends AnyFunSuite with SparkSpec {

@@ -7,7 +7,6 @@ import graft.SparkSpec
 class CorpusSinkSpec extends AnyFunSuite with SparkSpec {
 
   test("writePartitioned: pruned layout, sorted files, record cap") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
     try {
       val df = Sampling.withEpochKey(

@@ -42,7 +42,6 @@ class SamplingSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("domainMix keeps ~weight per domain, all of weight-1, none of unknown") {
-    import spark.implicits._
     val df = spark.range(8000).toDF("id")
       .withColumn("domain",
         element_at(array(lit("web"), lit("code"), lit("wiki"), lit("junk")),

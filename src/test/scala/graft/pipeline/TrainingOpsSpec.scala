@@ -341,7 +341,6 @@ class TrainingOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("chunk: full coverage, stride overlap, trailing/short/empty docs") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val toks10 = (1 to 10).map(i => s"t$i").mkString(" ")
     val df = Seq((1L, toks10), (2L, "a b"), (3L, "")).toDF("doc_id", "text")
     val out = Packing.chunk(df, "doc_id", "text", chunkSize = 4, stride = 3)

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Winnowing fingerprints + edit-distance near-dup (Dedup additions). */

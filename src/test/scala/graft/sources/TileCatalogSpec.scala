@@ -1,8 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.lit
@@ -104,21 +101,6 @@ class TileCatalogSpec extends AnyFunSuite with SparkSpec {
     for (kc <- 0 until 4; kr <- 0 until 4)
       yield (kc, kr, Array.tabulate(16)(i => (kc * 4 + kr) % 5 + i % 3))
 
-  /** Row count of every Parquet row group of one (raster, zoom). */
-  private def rowGroupRows(dir: String, rasterId: String, zoom: Int): Seq[Long] = {
-    val conf = spark.sessionState.newHadoopConf()
-    new java.io.File(s"$dir/tiles/raster_id=$rasterId/zoom=$zoom").listFiles()
-      .filter(_.getName.endsWith(".parquet")).toSeq
-      .flatMap { f =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(f.getPath), conf))
-        try {
-          val groups = reader.getRowGroups
-          (0 until groups.size).map(groups.get(_).getRowCount)
-        } finally reader.close()
-      }
-  }
-
   test("a one-tile AOI scans one tile's row group, not the layer") {
     val dir = java.nio.file.Files.createTempDirectory("graft-prune").toString
     TileCatalog.writeIntLayer(spark, dir, grid4, grid4Tiles)
@@ -147,7 +129,7 @@ class TileCatalogSpec extends AnyFunSuite with SparkSpec {
     val ovr = TileCatalog.buildOverview(spark, dir, px)
     val layers = Seq((grid4, 16), (dbl, 16), (px, 16), (ovr, 4))
     layers.foreach { case (m, tiles) =>
-      val groups = rowGroupRows(dir, m.rasterId, m.zoom)
+      val groups = TileCatalog.rowGroupRows(spark, dir, m.rasterId, m.zoom)
       assert(groups == Seq.fill(tiles)(1L), s"${m.rasterId}@${m.zoom}")
     }
   }
@@ -164,7 +146,7 @@ class TileCatalogSpec extends AnyFunSuite with SparkSpec {
       .withColumn("zoom", lit(old.zoom))
       .coalesce(1)
       .write.mode("append").partitionBy("raster_id", "zoom").parquet(s"$dir/tiles")
-    assert(rowGroupRows(dir, old.rasterId, old.zoom) == Seq(16L))
+    assert(TileCatalog.rowGroupRows(spark, dir, old.rasterId, old.zoom) == Seq(16L))
     TileCatalog.writeIntLayer(spark, dir, grid4, grid4Tiles)
     // spans parts of nine tiles
     val aoi = gf.createMultiPolygon(Array(gf.createPolygon(Array(
@@ -178,5 +160,29 @@ class TileCatalogSpec extends AnyFunSuite with SparkSpec {
     assert(tiles(old) == tiles(grid4))
     assert(counts(old).nonEmpty)
     assert(counts(old) == counts(grid4))
+  }
+
+  test("ensureSpec rebuilds a fixture catalog left in the one-row-group layout") {
+    val spec = ZonalFixture.Spec(2, 1, 8)
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_zonal_2x1x8"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    assert(ZonalFixture.ensureSpec(spark, spec) == dir)
+    assert(!ZonalFixture.staleLayout(spark, dir, spec), "writeIntLayer output is current")
+    // rewrite nlcd as the writers before one-row-group-per-tile left it:
+    // one plain write, both tiles in one row group
+    val nlcd = ZonalFixture.metas(spec).head
+    val layer = s"$dir/tiles/raster_id=${nlcd.rasterId}/zoom=${nlcd.zoom}"
+    spark.read.parquet(layer).coalesce(1).write.parquet(s"$dir/old_layer")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(layer))
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$dir/old_layer"),
+      java.nio.file.Paths.get(layer))
+    assert(TileCatalog.rowGroupRows(spark, dir, nlcd.rasterId, nlcd.zoom) == Seq(2L))
+    assert(ZonalFixture.staleLayout(spark, dir, spec))
+    // same path (perfbench's Catalog.ensure requires it), rebuilt layout
+    assert(ZonalFixture.ensureSpec(spark, spec) == dir)
+    assert(!ZonalFixture.staleLayout(spark, dir, spec))
+    val groups = TileCatalog.rowGroupRows(spark, dir, nlcd.rasterId, nlcd.zoom)
+    assert(groups.sum == 2L && groups.forall(_ == 1L))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.pipeline.Dedup
