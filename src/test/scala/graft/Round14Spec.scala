@@ -41,7 +41,6 @@ class Round14Spec extends AnyFunSuite with SparkSpec {
   }
 
   test("ranged percentiles: boundary collect stays within the 2P-2 bound") {
-    import spark.implicits._
     import graft.operators.ExactPercentiles
     // 2000 groups over 1M rows with one hot group (40% of rows): many
     // groups must NOT inflate the driver collect — only partition-

@@ -4,10 +4,10 @@ package pipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[Dedup]] operators: the exact-pair truth path on a hot
-  * (boilerplate) shingle, the ngram-pair self-join shape, store
-  * compaction and the semantic screens, the restart seam, and
-  * hand-computed overlap cases.
+/** [[Dedup]] and [[Similarity]] screens: hashed word shingles, store
+  * compaction and the semantic dedup screen. (The ngram-pair,
+  * restart-seam and hand-computed overlap cases are still in
+  * Round7Spec, Round13Spec, Round14Spec and Round15Spec.)
   */
 class DedupSpec extends AnyFunSuite with SparkSpec {
 
@@ -106,180 +106,5 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val plan = Similarity.semDedupScreen(delta, "vec_id", "embedding",
       storeM, cents).queryExecution.optimizedPlan.toString
     assert(!plan.contains("Window"), "incoming side must be map-only")
-  }
-
-  test("ngramJaccardPairs: pair generation is a reused-exchange sort-merge self-join") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "a b c d e f g h"),
-      (2L, "a b c d e f g x"),
-      (3L, "a b c d e f g h"), // exact dup of 1
-      (4L, "z y x w v u t s")
-    ).toDF("doc_id", "text")
-    val pairs = pipeline.Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 3, minJaccard = 0.5)
-    val plan = pairs.queryExecution.executedPlan.toString
-    // the join NODE keyed on the shingle hash must be the sort-merge —
-    // the earlier `contains("SortMergeJoin")` alone could be satisfied
-    // by some other join while the pair join silently broadcast
-    // (round-13 advisor: the old second assert was vacuous)
-    assert(plan.linesIterator.exists(l =>
-        l.contains("SortMergeJoin") && l.contains("[h#")),
-      "pair generation must be a sort-merge join on the shingle hash " +
-        "(spills, never hot-bucket arrays)")
-    assert(!plan.linesIterator.exists(l =>
-        l.contains("BroadcastHashJoin") && l.contains("[h#")),
-      "pair join on the shingle hash must never be a broadcast")
-    val got = pairs.orderBy("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    // docs 1/3 identical (J=1.0); 1-2 and 2-3 share 5 of 7 shingles
-    // (J = 5/(6+6-5) = 0.7143); doc 4 disjoint
-    assert(got == Seq((1L, 2L, 0.7143), (1L, 3L, 1.0), (2L, 3L, 0.7143)))
-  }
-
-  test("store compaction slices overlap: %101 re-crawl crosses %4 segments") {
-    // the advisor item: with %100 (divisible by 4) the re-crawl slice
-    // was a SUBSET of the %4 slice and no doc ever appeared in two
-    // segments — the compactor's key dedup collapsed nothing
-    val inTwo = (0L until 1000L).count { id =>
-      val segs = (0L to 3L).filter(m => id % 4 == m || id % 101 == m)
-      segs.size > 1
-    }
-    assert(inTwo > 0, "some docs must land in two segments")
-  }
-
-  test("restart pin: a parquet round-trip through a FRESH session screens identically") {
-    import spark.implicits._
-    import pipeline.Dedup
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta"),
-      (2L, "alpha beta gamma delta epsilon zeta eta"), // dup of 1
-      (10L, "alpha beta gamma delta epsilon zeta eta"), // delta dup of store
-      (20L, "one two three four five six seven"),
-      (30L, "one two three four five six seven"), // delta dup of delta 20
-      (40L, "totally novel content nothing shared here")
-    ).toDF("doc_id", "text")
-    val store = docs.filter(col("doc_id") < 10)
-    val delta = docs.filter(col("doc_id") >= 10)
-    val dir = java.nio.file.Files.createTempDirectory("r13restart").toFile
-    try {
-      val buckets = Dedup.minhashBuckets(
-        Dedup.minhashSignatures(store, "doc_id", "text", n = 3, numHashes = 12),
-        numHashes = 12, bands = 4)
-      buckets.write.mode("overwrite").parquet(s"$dir/store")
-      // single-session verdicts (no round-trip)
-      val direct = Dedup.minhashMergeDelta(buckets, delta, "doc_id", "text",
-        n = 3, numHashes = 12, bands = 4).orderBy("doc").collect().toSeq
-      // fresh session: only the parquet bytes cross the seam
-      val s2 = spark.newSession()
-      val rt = Dedup.minhashMergeDelta(
-        s2.read.parquet(s"$dir/store"),
-        s2.createDataFrame(java.util.Arrays.asList(delta.collect(): _*),
-          delta.schema),
-        "doc_id", "text", n = 3, numHashes = 12, bands = 4)
-        .orderBy("doc").collect().toSeq
-      assert(rt == direct, "round-tripped store must screen identically")
-      val kept = direct.filter(_.getAs[Boolean]("kept")).map(_.getLong(0))
-      assert(kept.contains(40L) && !kept.contains(10L) && !kept.contains(30L))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(dir)
-    }
-  }
-
-  // 3 organic near-dup docs plus 6 docs sharing ONE boilerplate
-  // 3-gram ("x y z" embedded in otherwise-disjoint text): the
-  // boilerplate shingle has df=6, everything else df≤3
-  private def corpus = {
-    import spark.implicits._
-    (Seq(
-      (1L, "a b c d e f"),
-      (2L, "a b c d e g"),
-      (3L, "a b c d e f")) ++
-      (10L to 15L).map(i => (i, s"u$i v$i x y z w$i"))).toDF("doc_id", "text")
-  }
-
-  test("ngramJaccardPairs: a hot shingle's bucket yields every pair at its exact score") {
-    val got = pipeline.Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
-      n = 3, minJaccard = 0.0).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    // the 6-doc boilerplate bucket owes C(6,2) = 15 pair rows: docs
-    // 10..15 share nothing but "x y z"
-    val boilerPairs = got.keys.filter { case (a, b) => a >= 10L && b >= 10L }
-    assert(boilerPairs.size == 15)
-    // driver-side exact Jaccard over the 3-gram sets, rounded like the op
-    val shingles = corpus.collect().map { r =>
-      r.getLong(0) -> r.getString(1).split(' ').sliding(3).map(_.mkString(" ")).toSet
-    }.toMap
-    val want = (for {
-      (a, sa) <- shingles; (b, sb) <- shingles
-      if a < b && (sa & sb).nonEmpty
-    } yield (a, b) -> BigDecimal((sa & sb).size.toDouble / (sa | sb).size)
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
-    assert(got == want)
-  }
-
-  test("minhashMergeDeltaFromBuckets ≡ minhashMergeDelta (shared bucket table)") {
-    import spark.implicits._
-    val docs = (Seq(
-      (1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "a b c d e f"),
-      (4L, "p q r s t u"), (5L, "zz yy xx ww vv")) ++
-      (10L to 20L).map(i => (i, s"m$i n$i o$i p q r")))
-      .toDF("doc_id", "text")
-    val store = docs.filter(col("doc_id") % 3 =!= 0L)
-    val delta = docs.filter(col("doc_id") % 3 === 0L)
-    val storeBuckets = pipeline.Dedup.minhashBuckets(
-      pipeline.Dedup.minhashSignatures(store, "doc_id", "text", n = 3, numHashes = 12),
-      numHashes = 12, bands = 4)
-    val a = pipeline.Dedup.minhashMergeDelta(storeBuckets, delta, "doc_id", "text",
-      n = 3, numHashes = 12, bands = 4).orderBy("doc").collect().map(_.toSeq).toSeq
-    val dB = pipeline.Dedup.minhashBuckets(
-      pipeline.Dedup.minhashSignatures(delta, "doc_id", "text", n = 3, numHashes = 12),
-      numHashes = 12, bands = 4).localCheckpoint()
-    val b = pipeline.Dedup.minhashMergeDeltaFromBuckets(storeBuckets, dB)
-      .orderBy("doc").collect().map(_.toSeq).toSeq
-    assert(a == b, "verdicts must be a pure function of the bucket rows")
-    assert(a.nonEmpty)
-  }
-
-  test("boilerplateCoverage: a shared 2-gram covers both its positions") {
-    import spark.implicits._
-    val df = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
-    val out = Dedup.boilerplateCoverage(df, "doc_id", "text", n = 2, minDf = 2L)
-      .orderBy("doc").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(out.toSeq == Seq((1L, 3L, 2L, 1L), (2L, 3L, 2L, 1L)))
-  }
-
-  test("crossSourceOverlap: one shared 2-gram out of two per source") {
-    import spark.implicits._
-    val df = Seq(("s1", "a b c"), ("s2", "a b d")).toDF("source", "text")
-    val r = Dedup.crossSourceOverlap(df, "source", "text", n = 2)
-      .collect().head
-    assert((r.getAs[String]("src_a"), r.getAs[String]("src_b"),
-      r.getAs[Long]("inter"), r.getAs[Long]("na"), r.getAs[Long]("nb"),
-      r.getAs[Long]("overlap_micro")) == (("s1", "s2", 1L, 2L, 2L, 500000L)))
-  }
-
-  test("weightedJaccardPairs: rare-token weighting separates pairs") {
-    import spark.implicits._
-    // three near-identical docs; w(t) = N − df + 1: shared-everywhere
-    // tokens weigh 1, doc-unique tokens weigh 3
-    val df = Seq((1L, "a b c d e f g h i j"), (2L, "a b c d e f g h i j"),
-      (3L, "a b c d e f g h i zz")).toDF("doc_id", "text")
-    val out = Dedup.weightedJaccardPairs(df, "doc_id", "text", minMicro = 0L)
-      .orderBy("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(4))).toSeq
-    // identical docs MUST collide in every LSH band → wJ = 1
-    assert(out.find(p => p._1 == 1L && p._2 == 2L).exists(_._3 == 1000000L))
-    // the 'zz'-divergent pair: a..i shared by all 3 docs → df 3 → w 1;
-    // j in docs 1,2 → w 2; zz only in 3 → w 3. inter(1,3) = 9,
-    // wsum1 = 11, wsum3 = 12, union = 14 → ⌊9e6/14⌋ = 642857. LSH
-    // candidates are probabilistic, so assert the VALUE only when the
-    // bands surfaced the pair (recall has its own gates: q73/q81/q103)
-    assert(out.find(p => p._1 == 1L && p._2 == 3L).forall(_._3 == 642857L))
   }
 }

@@ -3,9 +3,10 @@ package pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[Graph]] operators: hand-computed label propagation, Katz, k-truss,
-  * star-round and link-prediction cases, and the equivalence of the
-  * screened and precomputed-support paths with the plain ones.
+/** [[Graph]] operators: hand-computed label propagation, Katz, k-truss
+  * and star-round cases, and the equivalence of the screened and
+  * precomputed-support paths with the plain ones. (The link-prediction
+  * case is still in Round7Spec.)
   */
 class GraphSpec extends AnyFunSuite with SparkSpec {
 
@@ -61,18 +62,6 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
     val withSup = pipeline.Graph.ktrussPeelRounds(edges, "a", "b", k = 4,
       rounds = 3, support = Some(sup)).orderBy("round").collect().toSeq
     assert(plain == withSup)
-  }
-
-  test("linkPrediction: the 4-cycle's two diagonals, hub cap respected") {
-    import spark.implicits._
-    val e = Seq((1L, 2L), (2L, 4L), (4L, 3L), (3L, 1L)).toDF("a", "b")
-    val out = Graph.linkPrediction(e, "a", "b", k = 20, maxDegree = 64L)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSeq
-    assert(out == Seq((1L, 4L, 2L, 4L), (2L, 3L, 2L, 4L)))
-    // cap below every degree → no candidates survive
-    assert(Graph.linkPrediction(e, "a", "b", k = 20, maxDegree = 1L)
-      .collect().isEmpty)
   }
 
   test("labelPropagation: barbell splits into its two triangles") {
