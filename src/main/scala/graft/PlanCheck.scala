@@ -299,16 +299,17 @@ object PlanCheck {
       pipeline.Graph.starRoundPlan(edges, "doc_a", "doc_b")
     }))
 
-  /** Round-9 judge item 7: the reference-flagship `/multi` batch plan,
-    * pinned structurally instead of by a one-off rehearsal note. The
-    * check builds the exact q34 op set twice — 4 shapes and 32 shapes —
-    * and requires the physical-plan node census (node name → count) to
-    * be IDENTICAL: shapes ride the broadcast mask plane inside one
-    * unioned plan, so adding shapes must never add scans, joins, or
-    * unions (a per-shape rescan/loop would multiply scan nodes 8×
-    * here and 1000× on a real watershed batch), and the census must
-    * contain a Union. CartesianProduct is forbidden as everywhere else.
-    * Returns the problems found; PlanCheckSpec asserts there are none.
+  /** The reference-flagship `/multi` batch plan, pinned structurally.
+    * The check builds the exact q34 op set twice — 4 shapes and 32
+    * shapes — and requires the physical-plan node census (node name →
+    * count) to be IDENTICAL: shapes ride the kernel's shape array
+    * inside one zonal pass, so adding shapes must never add scans,
+    * joins, or unions (a per-shape rescan/loop would multiply scan
+    * nodes 8× here and 1000× on a real watershed batch). Every op
+    * rides that one pass too: the census must hold exactly one
+    * `ZonalPlaneExec` and no `Union`. CartesianProduct is forbidden as
+    * everywhere else. Returns the problems found; PlanCheckSpec
+    * asserts there are none.
     */
   private[graft] def zonalMultiCheck(
       s: org.apache.spark.sql.SparkSession, dir: String): Seq[String] = {
@@ -345,10 +346,10 @@ object PlanCheck {
         Seq("multi plan census varies with shape count (per-shape " +
           s"fan-out): 4-shape=$small vs 32-shape=$bigC")
       else Nil
-    val unioned =
-      if (bigC.keys.exists(_.contains("Union"))) Nil
-      else Seq("expected ONE unioned plan")
-    forbidden ++ drift ++ unioned
+    val onePass =
+      if (bigC.get("ZonalPlaneExec").contains(1) && !bigC.keys.exists(_.contains("Union"))) Nil
+      else Seq(s"expected exactly one ZonalPlaneExec and no Union: $bigC")
+    forbidden ++ drift ++ onePass
   }
 
   /** Round-12 (judge item 5): the q459 corpus-build composite's four

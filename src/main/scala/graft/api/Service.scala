@@ -137,8 +137,6 @@ object Service {
   private def crs(name: Option[String], default: Projections.Crs): Projections.Crs =
     name.map(Projections.byName).getOrElse(default)
 
-  private def aoiOf(in: InputData): MultiPolygon = GeomOps.unionAll(aoisOf(in))
-
   private def aoisOf(in: InputData): Seq[MultiPolygon] = {
     val from = crs(in.polygonCRS, Projections.LatLng)
     val to = crs(in.rasterCRS, Projections.ConusAlbers)
@@ -157,43 +155,39 @@ object Service {
     pixelIsArea.map(p => Rasterizer.Options(includePartial = true, pixelIsArea = p))
       .getOrElse(Rasterizer.DEFAULT)
 
-  /** `POST /run` — dispatch on operationType (WebServer.scala:75-93). */
+  private val operationTypes = Set("RasterGroupedCount", "RasterGroupedCountMany",
+    "RasterGroupedAverage", "RasterSummary", "RasterLinesJoin")
+
+  /** `POST /run` — dispatch on operationType (WebServer.scala:75-93).
+    * The ids, layout and layers are resolved once, before the dispatch,
+    * so "rasters must share one layout" comes before any Spark job.
+    */
   def run(cat: Catalog, requestJson: String): String = {
-    val req = JsonMethods.parse(requestJson).extract[PostRequest]
-    val in = req.input
+    val in = JsonMethods.parse(requestJson).extract[PostRequest].input
+    val op = in.operationType
+    if (!operationTypes(op)) throw new InvalidOperationException(op)
+    val ids = if (op != "RasterGroupedAverage") in.rasters
+              else in.rasters :+ in.targetRaster.getOrElse(throw new MissingTargetRasterException)
     val o = opts(in.pixelIsArea)
-    val z = in.zoom
-    val result: JValue = in.operationType match {
+    val aois = aoisOf(in)
+    val aoi = GeomOps.unionAll(aois)
+    val lines = if (op == "RasterLinesJoin") linesOf(in, aoi) else Nil
+    val layout = cat.layout(ids, in.zoom)
+    val layers = cat.layers(ids, aoi, in.zoom)
+    val result: JValue = op match {
       case "RasterGroupedCount" =>
-        val aoi = aoiOf(in)
-        val layers = cat.layers(in.rasters, aoi, z)
-        toJ(Render.toResultInt(Zonal.groupedCount(cat.spark, cat.layout(in.rasters, z), layers, aoi, o)))
+        toJ(Render.toResultInt(Zonal.groupedCount(cat.spark, layout, layers, aoi, o)))
       case "RasterGroupedCountMany" =>
-        val aois = aoisOf(in)
-        val union = GeomOps.unionAll(aois)
-        val layers = cat.layers(in.rasters, union, z)
-        val df = Zonal.groupedCountMany(cat.spark, cat.layout(in.rasters, z), layers, aois, o)
+        val df = Zonal.groupedCountMany(cat.spark, layout, layers, aois, o)
         JArray(Render.toResultManyInt(df, aois.size).map(toJ).toList)
       case "RasterGroupedAverage" =>
-        val target = in.targetRaster.getOrElse(throw new MissingTargetRasterException)
-        val ids = in.rasters :+ target
-        val layout = cat.layout(ids, z)
-        val aoi = aoiOf(in)
-        val layers = cat.layers(ids, aoi, z)
         toJD(Render.toResultDouble(
           Zonal.groupedAverage(cat.spark, layout, layers.init, layers.last, aoi, o)))
       case "RasterSummary" =>
-        val aoi = aoiOf(in)
-        val layers = cat.layers(in.rasters, aoi, z)
-        val rows = Render.toResultSummary(
-          Zonal.summary(cat.spark, cat.layout(in.rasters, z), layers, aoi, o))
+        val rows = Render.toResultSummary(Zonal.summary(cat.spark, layout, layers, aoi, o))
         JArray(rows.map(m => JObject(m.map { case (k, v) => k -> (JDouble(v): JValue) }.toList)).toList)
-      case "RasterLinesJoin" =>
-        val aoi = aoiOf(in)
-        val lines = linesOf(in, aoi)
-        val layers = cat.layers(in.rasters, aoi, z)
-        toJ(Render.toResultInt(Zonal.linesJoin(cat.spark, cat.layout(in.rasters, z), layers, lines)))
-      case other => throw new InvalidOperationException(other)
+      case _ =>
+        toJ(Render.toResultInt(Zonal.linesJoin(cat.spark, layout, layers, lines)))
     }
     JsonMethods.compact(JsonMethods.render(JObject("result" -> result)))
   }
@@ -204,9 +198,9 @@ object Service {
     JObject(m.toList.sortBy(_._1).map { case (k, v) => k -> (JDouble(v): JValue) })
 
   /** `POST /multi` — the batch orchestrator (Geoprocessing.scala:21-89):
-    * layers fetched ONCE for the union of all shapes and cached; each
-    * (shape, operation) pair computes over the shared scan; results
-    * nest as HucID → label → key → Double (Ints widened,
+    * layers fetched ONCE for the union of all shapes; every (shape,
+    * operation) pair comes from one zonal pass over them; results nest
+    * as HucID → label → key → Double (Ints widened,
     * Geoprocessing.scala:56).
     */
   def runMulti(cat: Catalog, requestJson: String): String = {
@@ -218,11 +212,6 @@ object Service {
     val rasterIds = req.operations.flatMap(op => op.rasters ++ op.targetRaster).distinct
     val streamLines = req.streamLines.map(
       GeomOps.toLines(_, from, Projections.ConusAlbers))
-
-    // one unioned plan: every operation becomes a multi-shape batch op
-    // over the shared cached scans (SURVEY §3.2) — a single Spark job
-    // instead of |shapes| × |operations| jobs. Validated BEFORE any
-    // scan is cached so a bad operation never leaks a persisted layer.
     val batchOps: Seq[Zonal.BatchOp] = req.operations.map { op =>
       op.name match {
         case "RasterGroupedCount" =>
@@ -241,36 +230,23 @@ object Service {
       }
     }
     val layout = cat.layout(rasterIds)
-    // shared scan: one cached cropped DataFrame per raster id. Built
-    // incrementally inside the try so a failure while fetching a later
-    // raster still unpersists the layers already cached for earlier ones.
-    val shared = scala.collection.mutable.Map.empty[String, Zonal.Layer]
-    try {
-      rasterIds.foreach { id =>
-        val l = cat.layers(Seq(id), unionAoi).head
-        shared(id) = l.copy(df = l.df.persist())
-      }
-      val rows = Zonal.multiBatch(cat.spark, layout, shared.toMap, shapes.map(_._2),
-        streamLines, batchOps).collect()
-      val hucIds = shapes.map(_._1)
-      val nested: Map[String, Map[String, Map[String, Double]]] =
-        rows.groupBy(r => hucIds(r.getInt(0))).map { case (huc, rs) =>
-          huc -> rs.groupBy(_.getString(1)).map { case (label, ls) =>
-            label -> ls.map(r => r.getString(2) -> r.getDouble(3)).toMap
-          }
+    val layers = rasterIds.zip(cat.layers(rasterIds, unionAoi)).toMap
+    val rows = Zonal.multiBatch(cat.spark, layout, layers, shapes.map(_._2),
+      streamLines, batchOps).collect()
+    val hucIds = shapes.map(_._1)
+    val nested: Map[String, Map[String, Map[String, Double]]] =
+      rows.groupBy(r => hucIds(r.getInt(0))).map { case (huc, rs) =>
+        huc -> rs.groupBy(_.getString(1)).map { case (label, ls) =>
+          label -> ls.map(r => r.getString(2) -> r.getDouble(3)).toMap
         }
-      // operations yielding no rows for a shape still appear as {} —
-      // reference tolerance for non-intersecting shapes (CHANGELOG:71-79)
-      val complete = hucIds.map { huc =>
-        val labels = req.operations.map(_.label)
-        val present = nested.getOrElse(huc, Map.empty)
-        huc -> labels.map(l => l -> present.getOrElse(l, Map.empty[String, Double])).toMap
-      }.toMap
-      Serialization.write(complete)
-    } finally {
-      // unpersist on every exit path — a long-lived service must not
-      // leak cached scans when a query fails mid-flight
-      shared.values.foreach(_.df.unpersist())
-    }
+      }
+    // operations yielding no rows for a shape still appear as {} —
+    // reference tolerance for non-intersecting shapes (CHANGELOG:71-79)
+    val complete = hucIds.map { huc =>
+      val labels = req.operations.map(_.label)
+      val present = nested.getOrElse(huc, Map.empty)
+      huc -> labels.map(l => l -> present.getOrElse(l, Map.empty[String, Double])).toMap
+    }.toMap
+    Serialization.write(complete)
   }
 }

@@ -1789,7 +1789,7 @@ private[graft] object DedupGates extends GateFamily {
       // table — minhashMergeDelta(live, slice(m), …) re-ran the
       // slice's shingle+minhash pass a second time per batch (×6 over
       // the loop). Verdicts are a pure function of the bucket rows ⇒
-      // bit-identical (Round15Spec pin); oracle unchanged.
+      // bit-identical (DedupSpec pin); oracle unchanged.
       val v = Dedup.minhashMergeDeltaFromBuckets(live, dB).localCheckpoint()
       val dupB = dB.join(v.filter(col("dup_of_store")).select("doc"),
         Seq("doc"), "left_semi")

@@ -1070,7 +1070,7 @@ private[graft] object SimilarityGates extends GateFamily {
     // top-20 cut above, so the whole greedy selection collapses into ONE
     // aggregate + the fused [[org.apache.spark.sql.graft.MmrPick]]
     // kernel — same integer scores, same (score desc, doc asc) argmax
-    // tie-break, spec-pinned against the verbatim loop in Round15Spec.
+    // tie-break, spec-pinned against the verbatim loop in MmrSpec.
     val candAgg = cand.groupBy("query_id")
       .agg(collect_list(struct(col("doc_id"), col("rel"))).as("cands"))
     val simAgg = psim0.groupBy("query_id")

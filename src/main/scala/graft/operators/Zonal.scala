@@ -13,29 +13,32 @@ import graft.raster.{Extent, Layout, NoData, RasterExtent, Rasterizer}
 import graft.sources.TileCatalog.RasterMeta
 
 /** The reference's zonal-statistics operators (SURVEY §2.1 rows A–G)
-  * as Spark plans over the tiles table, all built on ONE kernel,
-  * [[plane]]:
+  * as Spark plans over the tiles table, all built on ONE pass,
+  * [[pass]]:
   *
-  *   pruned scan(s) → full-outer align join on SpatialKey (NODATA
-  *   fill) → one [[ZonalPlaneExec]] that, per tile and per shape whose
-  *   envelope touches the tile, masks the shape's cells, reads them in
-  *   place from the tile arrays and PARTIALLY AGGREGATES them by value
-  *   tuple → tiny final Catalyst aggregation.
+  *   pruned scan per distinct raster → full-outer align join on
+  *   SpatialKey (NODATA fill) → one [[ZonalPlaneExec]] that, per tile
+  *   and per shape whose envelope touches the tile, walks each
+  *   DISTINCT mask once, reads the walked cells in place from the tile
+  *   arrays and PARTIALLY AGGREGATES them by value tuple for every op
+  *   on that mask → tiny final Catalyst aggregation.
   *
   * A [[Mask]] decides which cells of a tile a shape covers:
   *  - [[PolygonMask]]: `Rasterizer.foreachCellByPolygon` under the
   *    request's `Rasterizer.Options` (rows A–C, E, F,
   *    `RasterGroupedSum` and G's polygon ops);
-  *  - [[LineMask]]: `Rasterizer.foreachCellByLines`, whose per-(tile,
-  *    shape) BitSet visits each crossed pixel once. Pixels belong to
-  *    exactly one tile, so the per-tile counts already are the
-  *    reference's COUNT DISTINCT (row D; the reference used a
-  *    concurrent TrieMap set for the same dedup).
+  *  - [[LineMask]]: `Rasterizer.foreachCellByLines` over the shape's
+  *    clipped lines, whose per-(tile, shape) BitSet visits each crossed
+  *    pixel once. Pixels belong to exactly one tile, so the per-tile
+  *    counts already are the reference's COUNT DISTINCT (row D; the
+  *    reference used a concurrent TrieMap set for the same dedup).
   *
-  * Every operator is a projection or aggregation over that plane; a
-  * single-AOI operator is the one-shape case of its batch form.
+  * Every public operator is one pass plus its own projection (summary:
+  * one per raster); a single-AOI operator is the one-shape case, and
+  * the /multi batch (row G) is every (shape, op) pair of a request in
+  * one pass.
   *
-  * The kernel emits one row per (tile, shape, value-tuple) — never
+  * The kernel emits one row per (op, tile, shape, value-tuple) — never
   * per pixel — so shuffle volume is O(tiles × groups), not O(pixels):
   * a 100 TB catalog shuffles a few hundred rows per tile regardless of
   * tile size (group cardinality is ≤ ~500 in the reference workload,
@@ -54,8 +57,9 @@ import graft.sources.TileCatalog.RasterMeta
   *  - summary min/max skip NODATA (as NULL — documented divergence
   *    from the reference's inert NaN guard, Utils.scala:266-284);
   *    summary avg counts every masked pixel with NODATA as 0.0;
-  *  - a tile missing from EVERY layer has no join key → contributes
-  *    no pixels (reference join-keys semantics, Utils.scala:221-232).
+  *  - a tile missing from EVERY layer an op reads contributes no
+  *    pixels to that op (reference join-keys semantics,
+  *    Utils.scala:221-232), even where the pass aligns other layers.
   */
 object Zonal {
 
@@ -102,6 +106,7 @@ object Zonal {
   }
 
   private[graft] val planeSchema = StructType(Seq(
+    StructField("op", IntegerType, nullable = false),
     StructField("shape_id", IntegerType, nullable = false),
     StructField("vals", ArrayType(IntegerType, containsNull = false)),
     StructField("cnt", LongType, nullable = false),
@@ -110,7 +115,8 @@ object Zonal {
     StructField("mx", DoubleType, nullable = true)))
 
   /** Which cells of a tile a shape covers; shipped inside the kernel,
-    * so it must serialize.
+    * so it must serialize. Masks are values: equal masks are walked
+    * once per (tile, shape) however many ops use them.
     */
   private[graft] sealed trait Mask extends Serializable {
     def foreachCell(g: Geometry, re: RasterExtent)(f: (Int, Int) => Unit): Unit
@@ -141,10 +147,19 @@ object Zonal {
       Rasterizer.foreachCellByLines(g, re)(f)
   }
 
+  /** One zonal op of a pass: its group layers and its target (`-1` =
+    * none) as indexes into the pass's aligned layers, and its mask.
+    */
+  private[graft] final case class Op(groups: Array[Int], target: Int, mask: Mask) {
+    def reads: Array[Int] = if (target < 0) groups else groups :+ target
+    override def toString: String =
+      s"Op(groups=${groups.mkString("[", ",", "]")}, target=$target, $mask)"
+  }
+
   /** Per-task partial aggregate: open addressing from a packed group
     * key to (cnt, sum, mn, mx) in parallel primitive arrays. `clear`
-    * resets only the slots the last (tile, shape) used; `slot(e)` is
-    * the e-th key seen since then.
+    * resets only the slots the last (op, tile, shape) used; `slot(e)`
+    * is the e-th key seen since then.
     */
   private final class Scratch {
     private var used = new Array[Boolean](64)
@@ -204,13 +219,19 @@ object Zonal {
   }
 
   /** THE zonal kernel, run by [[ZonalPlaneExec]] over the aligned tile
-    * rows `(key_col, key_row, t0, …)`: per (tile, shape, value tuple)
-    * one row `(shape_id, vals, cnt, sum, mn, mx)` where sum/mn/mx
-    * aggregate the (optional) target under the NODATA rules and
-    * `shape_id` indexes `shapes`. Layer i (groups first, then the
-    * target) stores Int cells iff `isInt(i)`.
+    * rows `(key_col, key_row, t0, …)`: per (op, tile, shape, value
+    * tuple) one row `(op, shape_id, vals, cnt, sum, mn, mx)` where
+    * sum/mn/mx aggregate the op's (optional) target under the NODATA
+    * rules, `op` indexes `ops` and `shape_id` indexes the shapes.
+    * Layer i stores Int cells iff `isInt(i)`. `masks` holds each
+    * distinct mask with the shapes' geometries it reads.
     *
-    * Masked cells are read in place from each tile's `ArrayData`,
+    * Per (tile, shape) each distinct mask is walked once into a per-task
+    * buffer of cell indexes, grown to the largest walk the task sees,
+    * which then feeds every op on that mask. An op skips a tile that every
+    * layer it reads lacks.
+    *
+    * Walked cells are read in place from each tile's `ArrayData`,
     * under the reference's `tile.get` / `tile.getDouble` rules:
     *  - group value: Int as stored; Double truncates, NaN → NODATA;
     *  - target value: Double as stored; Int NODATA → NaN;
@@ -219,19 +240,23 @@ object Zonal {
     * Up to two group values pack into one `Long` key; wider tuples
     * are interned to a per-task id.
     */
-  private[graft] final class Kernel(layout: Layout, isInt: Array[Boolean], n: Int,
-                                    hasTarget: Boolean, shapes: Array[BGeom],
-                                    mask: Mask) extends Serializable {
+  private[graft] final class Kernel(layout: Layout, isInt: Array[Boolean], ops: Array[Op],
+                                    masks: Array[(Mask, Array[BGeom])]) extends Serializable {
+    private val opsOf = masks.map { case (mk, _) => ops.indices.filter(ops(_).mask == mk).toArray }
+    private val reads = ops.map(_.reads)
+
     override def toString: String =
-      s"Kernel(groups=$n, target=$hasTarget, shapes=${shapes.length}, $mask)"
+      s"Kernel(shapes=${masks.headOption.fold(0)(_._2.length)}, ${ops.mkString(", ")})"
 
     def run(tiles: Iterator[InternalRow], m: ZonalPlaneExec.Metrics): Iterator[InternalRow] = {
       val acc = new Scratch
+      val tileCols = layout.tileCols
+      var walk = new Array[Int](1024)
       val toUnsafe = UnsafeProjection.create(planeSchema)
       val wideIds = scala.collection.mutable.HashMap.empty[Seq[Int], Long]
       val wide = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
       val cells = new Array[ArrayData](isInt.length)
-      val tileCols = layout.tileCols
+      val live = new Array[Boolean](ops.length)
 
       def group(i: Int, idx: Int): Int = {
         val a = cells(i)
@@ -239,24 +264,24 @@ object Zonal {
         else if (isInt(i)) a.getInt(idx)
         else { val d = a.getDouble(idx); if (d.isNaN) NoData.INT else d.toInt }
       }
-      def target(idx: Int): Double =
-        if (!hasTarget) 0.0
+      def target(t: Int, idx: Int): Double =
+        if (t < 0) 0.0
         else {
-          val a = cells(n)
+          val a = cells(t)
           if (a == null || a.isNullAt(idx)) Double.NaN
-          else if (!isInt(n)) a.getDouble(idx)
+          else if (!isInt(t)) a.getDouble(idx)
           else { val v = a.getInt(idx); if (v == NoData.INT) Double.NaN else v.toDouble }
         }
-      def key(idx: Int): Long = n match {
+      def key(g: Array[Int], idx: Int): Long = g.length match {
         case 0 => 0L
-        case 1 => group(0, idx).toLong
-        case 2 => (group(0, idx).toLong << 32) | (group(1, idx) & 0xffffffffL)
-        case _ =>
-          val t = Array.tabulate(n)(group(_, idx))
+        case 1 => group(g(0), idx).toLong
+        case 2 => (group(g(0), idx).toLong << 32) | (group(g(1), idx) & 0xffffffffL)
+        case n =>
+          val t = Array.tabulate(n)(j => group(g(j), idx))
           wideIds.getOrElseUpdate(scala.collection.immutable.ArraySeq.unsafeWrapArray(t),
             { wide += t; wide.size - 1L })
       }
-      def vals(k: Long): Array[Int] = n match {
+      def vals(n: Int, k: Long): Array[Int] = n match {
         case 0 => Array(0)
         case 1 => Array(k.toInt)
         case 2 => Array((k >>> 32).toInt, k.toInt)
@@ -266,14 +291,12 @@ object Zonal {
       tiles.flatMap { row =>
         val t0 = System.nanoTime()
         val re = layout.rasterExtent(row.getInt(0), row.getInt(1))
-        var i = 0
-        while (i < cells.length) {
-          cells(i) = if (row.isNullAt(2 + i)) null else row.getArray(2 + i)
-          i += 1
-        }
+        for (i <- cells.indices) cells(i) = if (row.isNullAt(2 + i)) null else row.getArray(2 + i)
+        for (o <- ops.indices) live(o) = reads(o).exists(cells(_) != null)
         val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-        var si = 0
-        while (si < shapes.length) {
+        // a mask that no op live on this tile reads is not walked here
+        for (((mask, shapes), onMask) <- masks.zip(opsOf) if onMask.exists(live(_));
+             si <- shapes.indices) {
           // envelope fast-path: a shape whose bbox misses this tile's
           // extent masks zero cells here — skip the mask entirely. At
           // 10⁴-shape batches this turns the per-tile cost from
@@ -281,24 +304,32 @@ object Zonal {
           // only for genuinely overlapping pairs.
           if (shapes(si).disjointFrom(re.extent)) m.envelopeSkips += 1
           else {
-            acc.clear()
+            var len = 0
             mask.foreachCell(shapes(si).geom, re) { (c, r) =>
-              val idx = r * tileCols + c
-              acc.add(key(idx), target(idx))
+              if (len == walk.length) walk = java.util.Arrays.copyOf(walk, 2 * len)
+              walk(len) = r * tileCols + c
+              len += 1
             }
-            var e = 0
-            while (e < acc.size) {
-              val s = acc.slot(e)
-              val mn = if (acc.mn(s).isNaN) null else acc.mn(s)
-              val mx = if (acc.mx(s).isNaN) null else acc.mx(s)
-              out += toUnsafe(new GenericInternalRow(Array[Any](si,
-                UnsafeArrayData.fromPrimitiveArray(vals(acc.keys(s))),
-                acc.cnt(s), acc.sum(s), mn, mx))).copy()
-              m.maskedPixels += acc.cnt(s)
-              e += 1
+            m.maskedPixels += len
+            for (o <- onMask if live(o)) {
+              val op = ops(o)
+              acc.clear()
+              var j = 0
+              while (j < len) {
+                val idx = walk(j)
+                acc.add(key(op.groups, idx), target(op.target, idx))
+                j += 1
+              }
+              for (e <- 0 until acc.size) {
+                val s = acc.slot(e)
+                val mn = if (acc.mn(s).isNaN) null else acc.mn(s)
+                val mx = if (acc.mx(s).isNaN) null else acc.mx(s)
+                out += toUnsafe(new GenericInternalRow(Array[Any](o, si,
+                  UnsafeArrayData.fromPrimitiveArray(vals(op.groups.length, acc.keys(s))),
+                  acc.cnt(s), acc.sum(s), mn, mx))).copy()
+              }
             }
           }
-          si += 1
         }
         m.tilesIn += 1
         m.rowsOut += out.size
@@ -308,19 +339,21 @@ object Zonal {
     }
   }
 
-  /** The partially-aggregated masked plane of `shapes` over the aligned
-    * layers, as a [[ZonalPlane]] node.
+  /** THE zonal pass: aligns `layers` once and runs `ops` in one
+    * [[ZonalPlane]] node, walking each distinct mask once per (tile,
+    * shape). Polygon masks read `shapes`; a [[LineMask]] reads `lines`,
+    * shape i's lines at i. Its plane has the [[planeSchema]] columns.
     */
-  private[graft] def plane(layout: Layout, groupLayers: Seq[Layer], target: Option[Layer],
-                           shapes: Seq[Geometry], mask: Mask): DataFrame = {
-    val layers = groupLayers ++ target.toSeq
-    ZonalPlane.of(joinLayers(layers), new Kernel(layout, layers.map(_.meta.isInt).toArray,
-      groupLayers.size, target.isDefined, shapes.map(bgeom).toArray, mask))
+  private[graft] def pass(layout: Layout, layers: Seq[Layer], shapes: Seq[Geometry],
+                          ops: Seq[Op], lines: Seq[Geometry] = Nil): DataFrame = {
+    require(ops.forall(_.reads.nonEmpty), "every zonal op reads at least one layer")
+    val masks = ops.map(_.mask).distinct.map(mk =>
+      mk -> (if (mk == LineMask) lines else shapes).map(bgeom).toArray)
+    ZonalPlane.of(joinLayers(layers),
+      new Kernel(layout, layers.map(_.meta.isInt).toArray, ops.toArray, masks.toArray))
   }
 
-  /** Final aggregation of a plane per (shape, value tuple). */
-  private def perShape(plane: DataFrame, agg: Column): DataFrame =
-    plane.groupBy(col("shape_id"), col("vals")).agg(agg)
+  private def all(layers: Seq[Layer]): Array[Int] = layers.indices.toArray
 
   /** Row A — `rasterGroupedCount` (Geoprocessing.scala:338-368):
     * COUNT(*) of masked pixels per distinct value tuple.
@@ -338,7 +371,14 @@ object Zonal {
   def groupedCountMany(spark: SparkSession, layout: Layout, layers: Seq[Layer],
                        aois: Seq[MultiPolygon],
                        opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    perShape(plane(layout, layers, None, aois, PolygonMask(opts)), sum(col("cnt")).as("cnt"))
+    pass(layout, layers, aois, Seq(Op(all(layers), -1, PolygonMask(opts))))
+      .groupBy(col("shape_id"), col("vals")).agg(sum(col("cnt")).as("cnt"))
+
+  /** The one-shape pass of a target over group layers. */
+  private def targeted(layout: Layout, groupLayers: Seq[Layer], target: Layer,
+                       aoi: MultiPolygon, opts: Rasterizer.Options): DataFrame =
+    pass(layout, groupLayers :+ target, Seq(aoi),
+      Seq(Op(all(groupLayers), groupLayers.size, PolygonMask(opts))))
 
   /** Rows B/C — `rasterAverage` / `rasterGroupedAverage`
     * (Geoprocessing.scala:245-277, 288-329): mean of target per value
@@ -348,35 +388,29 @@ object Zonal {
   def groupedAverage(spark: SparkSession, layout: Layout, groupLayers: Seq[Layer],
                      target: Layer, aoi: MultiPolygon,
                      opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    groupedAverageMany(spark, layout, groupLayers, target, Seq(aoi), opts)
-      .select(col("vals"), col("avg_v"))
-
-  /** Grouped average per shape in one pass (the /multi batch kernel). */
-  def groupedAverageMany(spark: SparkSession, layout: Layout, groupLayers: Seq[Layer],
-                         target: Layer, aois: Seq[MultiPolygon],
-                         opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    perShape(plane(layout, groupLayers, Some(target), aois, PolygonMask(opts)),
-      (sum(col("sum")) / sum(col("cnt"))).as("avg_v"))
+    targeted(layout, groupLayers, target, aoi, opts)
+      .groupBy(col("vals")).agg((sum(col("sum")) / sum(col("cnt"))).as("avg_v"))
 
   /** CHANGELOG-era `RasterGroupedSum` (reference CHANGELOG.md:151-153). */
   def groupedSum(spark: SparkSession, layout: Layout, groupLayers: Seq[Layer],
                  target: Layer, aoi: MultiPolygon,
                  opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
-    perShape(plane(layout, groupLayers, Some(target), Seq(aoi), PolygonMask(opts)),
-      sum(col("sum")).as("sum_v")).select(col("vals"), col("sum_v"))
+    targeted(layout, groupLayers, target, aoi, opts)
+      .groupBy(col("vals")).agg(sum(col("sum")).as("sum_v"))
 
   /** Row E — `rasterSummary` (Geoprocessing.scala:380-431): per input
     * raster (order preserved), min/avg/max over masked pixels; min/max
-    * skip NODATA, avg counts every masked pixel.
+    * skip NODATA, avg counts every masked pixel. One one-op pass per
+    * raster, unioned: a single pass over all rasters with one global
+    * conditional aggregate and an `explode` raised the `huc12_http`
+    * benchmark's peak RSS by about 10% (4 vCPU, `local[4]`).
     */
   def summary(spark: SparkSession, layout: Layout, layers: Seq[Layer],
               aoi: MultiPolygon,
               opts: Rasterizer.Options = Rasterizer.DEFAULT): DataFrame =
     layers.zipWithIndex.map { case (l, i) =>
-      plane(layout, Nil, Some(l), Seq(aoi), PolygonMask(opts))
-        .agg(
-          min(col("mn")).as("min_v"),
-          max(col("mx")).as("max_v"),
+      pass(layout, Seq(l), Seq(aoi), Seq(Op(Array.empty[Int], 0, PolygonMask(opts))))
+        .agg(min(col("mn")).as("min_v"), max(col("mx")).as("max_v"),
           (sum(col("sum")) / sum(col("cnt"))).as("avg_v"))
         .select(lit(i).as("idx"), lit(l.meta.rasterId).as("raster_id"),
           col("min_v"), col("avg_v"), col("max_v"))
@@ -388,34 +422,29 @@ object Zonal {
     */
   def linesJoin(spark: SparkSession, layout: Layout, layers: Seq[Layer],
                 lines: Seq[MultiLineString]): DataFrame =
-    linesJoinMany(spark, layout, layers, Seq(lines))
-      .select(col("vals"), col("cnt"))
+    pass(layout, layers, Nil, Seq(Op(all(layers), -1, LineMask)), Seq(merge(lines)))
+      .groupBy(col("vals")).agg(sum(col("cnt")).as("cnt"))
 
-  /** Lines join for many shapes in ONE pass (the 61-shape reference
-    * batch becomes one scan); each shape's lines merge into one
-    * multi-line so a pixel crossed by several counts once.
-    */
-  def linesJoinMany(spark: SparkSession, layout: Layout, layers: Seq[Layer],
-                    linesPerShape: Seq[Seq[MultiLineString]]): DataFrame = {
-    val gf = new GeometryFactory()
-    val shapes = linesPerShape.map { ls =>
-      gf.createMultiLineString((for (ml <- ls; i <- 0 until ml.getNumGeometries)
-        yield ml.getGeometryN(i).asInstanceOf[LineString]).toArray)
-    }
-    perShape(plane(layout, layers, None, shapes, LineMask), sum(col("cnt")).as("cnt"))
-  }
+  /** Lines as one multi-line, so a pixel crossed by several counts once. */
+  private def merge(ls: Seq[MultiLineString]): Geometry =
+    new GeometryFactory().createMultiLineString((for (ml <- ls; i <- 0 until ml.getNumGeometries)
+      yield ml.getGeometryN(i).asInstanceOf[LineString]).toArray)
 
   /** Batch op spec for [[multiBatch]]. */
-  sealed trait BatchOp { def label: String }
+  sealed trait BatchOp { def label: String; def rasters: Seq[String]; def reads: Seq[String] = rasters }
   final case class BatchCount(label: String, rasters: Seq[String],
                               opts: Rasterizer.Options = Rasterizer.DEFAULT) extends BatchOp
   final case class BatchAverage(label: String, rasters: Seq[String], target: String,
-                                opts: Rasterizer.Options = Rasterizer.DEFAULT) extends BatchOp
+                                opts: Rasterizer.Options = Rasterizer.DEFAULT) extends BatchOp {
+    override def reads: Seq[String] = rasters :+ target
+  }
   final case class BatchLines(label: String, rasters: Seq[String]) extends BatchOp
 
-  /** The /multi batch as ONE unioned DataFrame plan (SURVEY §3.2's
-    * "idiomatic-Spark win"): shared cached scans feed a single-pass
-    * multi-shape plane per op; output is
+  /** The /multi batch as ONE pass (SURVEY §3.2's long-format plan with
+    * `shape_id` and `op_label` and a single `groupBy`): the distinct
+    * rasters of `ops` are aligned once, each shape's stream lines are
+    * `lines` clipped to it, and every (shape, op) pair comes from the
+    * same visit of each (tile, shape). Output is
     * `(shape_id, op_label, k, v)` with Ints widened to Double
     * (reference Geoprocessing.scala:56).
     */
@@ -423,19 +452,23 @@ object Zonal {
                  aois: Seq[MultiPolygon],
                  lines: Seq[MultiLineString],
                  ops: Seq[BatchOp]): DataFrame = {
-    def tagged(df: DataFrame, label: String, v: String): DataFrame =
-      df.select(col("shape_id"), lit(label).as("op_label"), Render.listKeyCol.as("k"),
-        col(v).cast("double").as("v"))
-    ops.map {
-      case BatchCount(label, rasters, o) =>
-        tagged(groupedCountMany(spark, layout, rasters.map(shared), aois, o), label, "cnt")
-      case BatchAverage(label, rasters, target, o) =>
-        tagged(groupedAverageMany(spark, layout, rasters.map(shared), shared(target), aois, o),
-          label, "avg_v")
-      case BatchLines(label, rasters) =>
-        tagged(linesJoinMany(spark, layout, rasters.map(shared),
-          aois.map(GeomOps.clipLines(lines, _))), label, "cnt")
-    }.reduce(_.unionByName(_))
+    val ids = ops.flatMap(_.reads).distinct
+    def at(rs: Seq[String]) = rs.map(ids.indexOf(_)).toArray
+    val passOps = ops.map {
+      case BatchCount(_, rs, o) => Op(at(rs), -1, PolygonMask(o))
+      case BatchAverage(_, rs, t, o) => Op(at(rs), ids.indexOf(t), PolygonMask(o))
+      case BatchLines(_, rs) => Op(at(rs), -1, LineMask)
+    }
+    val shapeLines = if (!passOps.exists(_.mask == LineMask)) Nil
+                     else aois.map(a => merge(GeomOps.clipLines(lines, a)))
+    val averages = ops.indices.filter(ops(_).isInstanceOf[BatchAverage])
+    pass(layout, ids.map(shared), aois, passOps, shapeLines)
+      .groupBy(col("op"), col("shape_id"), col("vals"))
+      .agg(sum(col("cnt")).as("cnt"), sum(col("sum")).as("sum"))
+      .select(col("shape_id"), typedLit(ops.map(_.label)).getItem(col("op")).as("op_label"),
+        Render.listKeyCol.as("k"),
+        when(col("op").isin(averages: _*), col("sum") / col("cnt"))
+          .otherwise(col("cnt").cast("double")).as("v"))
   }
 }
 

@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  2. the rewritten global sweeps (q260/q312/q353/q370/q395/q414) and
   *     the ex-allowlist gates q431/q434 plan no unpartitioned
   *     WindowExec, the single-task global sort;
-  *  3. the `/multi` batch stays ONE unioned plan whose node census is
-  *     invariant in the shape count ([[PlanCheck.zonalMultiCheck]]);
+  *  3. the `/multi` batch stays ONE zonal pass (one `ZonalPlaneExec`,
+  *     no `Union`) whose node census is invariant in the shape count
+  *     ([[PlanCheck.zonalMultiCheck]]);
   *  4. the cartesian leg flags a CartesianProduct plan.
   */
 class PlanCheckSpec extends AnyFunSuite with SparkSpec {

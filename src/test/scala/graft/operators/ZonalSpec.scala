@@ -71,6 +71,14 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
       case z: ZonalPlaneExec => z.metrics(name).value
     }.sum
 
+  /** Node names of an executed plan, AQE stages included. */
+  private def nodeNames(df: DataFrame): Seq[String] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case p => p.nodeName }
+
+  /** A multiBatch frame as (shape, op_label, k) → v. */
+  private def batchRows(df: DataFrame): Map[(Int, String, String), Double] =
+    df.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)) -> r.getDouble(3)).toMap
+
   test("catalog scan prunes to intersecting tiles") {
     val m = TileCatalog.readMeta(path)("ca")
     val pruned = TileCatalog.readLayer(spark, path, m, square(0.5, 0.5, 3.5, 3.5))
@@ -139,6 +147,27 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
     assert(ids == Seq(0, 1))
   }
 
+  test("summary: each raster covers only its own tiles (per-op join keys)") {
+    // the AOI covers cb's missing tile (1,1) (gc, gr ≥ 4): cb's 27
+    // masked cells outside it are 18 of value 1 and 9 of value 2; cd
+    // has every tile
+    val rows = Zonal.summary(spark, layout, Seq(layer("cb"), layer("cd")), aoi).collect()
+    assert(rows.map(r => (r.getInt(0), r.getString(1))).toSeq == Seq((0, "cb"), (1, "cd")))
+    assert(rows(0).getDouble(2) == 1.0 && rows(0).getDouble(4) == 2.0)
+    assert(math.abs(rows(0).getDouble(3) - 36.0 / 27) < 1e-12)
+    val sum = (for (gc <- 1 to 6; gr <- 1 to 6; if !(gc == 5 && gr == 5))
+      yield (gc + gr).toDouble).sum
+    assert(rows(1).getDouble(2) == 2.0 && rows(1).getDouble(4) == 12.0)
+    assert(math.abs(rows(1).getDouble(3) - sum / 36) < 1e-12)
+  }
+
+  test("summary: an AOI disjoint from every tile gives one all-null row per raster") {
+    val rows = Zonal.summary(spark, layout, Seq(layer("cb"), layer("cd")),
+      square(20, 20, 21, 21)).collect()
+    assert(rows.map(r => (r.getInt(0), r.getString(1))).toSeq == Seq((0, "cb"), (1, "cd")))
+    assert(rows.forall(r => (2 to 4).forall(r.isNullAt)))
+  }
+
   test("groupedCountMany: per-shape results in one pass") {
     val aois = Seq(square(1, 5, 4, 7), square(4, 1, 7, 4))
     val df = Zonal.groupedCountMany(spark, layout, Seq(layer("ca"), layer("cb")), aois)
@@ -152,8 +181,8 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("plane emits one row per (tile, shape, value tuple), never per pixel") {
-    val rows = Zonal.plane(layout, Seq(layer("ca")), None, Seq(aoi),
-      Zonal.PolygonMask(Rasterizer.DEFAULT)).collect()
+    val rows = Zonal.pass(layout, Seq(layer("ca")), Seq(aoi),
+      Seq(Zonal.Op(Array(0), -1, Zonal.PolygonMask(Rasterizer.DEFAULT)))).collect()
     // each of the 4 tiles holds 3 masked gc values (3 px each); tile
     // (0,0) also splits off the NODATA cell at (2,2): 4×3 + 1 rows
     assert(rows.length == 13)
@@ -185,14 +214,15 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
   test("linesJoinMany: per-shape dedup in one pass") {
     val mkLine = (y: Double) => gf.createMultiLineString(Array(
       gf.createLineString(Array(new Coordinate(0.5, y), new Coordinate(7.5, y)))))
-    // shape 0 gets the row-6 line (y=1.5), shape 1 the row-1 line (y=6.5)
-    val df = Zonal.linesJoinMany(spark, layout, Seq(layer("ca")),
-      Seq(Seq(mkLine(1.5), mkLine(1.5)), Seq(mkLine(6.5))))
-    val got = df.collect().map(r =>
-      (r.getInt(0), r.getSeq[Int](1).head) -> r.getLong(2)).toMap
+    // shape 0 clips the row-6 line (y=1.5) twice, shape 1 the row-1
+    // line (y=6.5)
+    val df = Zonal.multiBatch(spark, layout, Map("ca" -> layer("ca")),
+      Seq(square(0, 1, 8, 2), square(0, 6, 8, 7)), Seq(mkLine(1.5), mkLine(1.5), mkLine(6.5)),
+      Seq(Zonal.BatchLines("lines_ca", Seq("ca"))))
+    val got = batchRows(df)
     // duplicate line in shape 0 still counts each pixel once
-    assert((0 to 7).forall(c => got((0, c)) == 1))
-    assert((0 to 7).forall(c => got((1, c)) == 1))
+    assert((0 to 7).forall(c => got((0, "lines_ca", s"List($c)")) == 1.0))
+    assert((0 to 7).forall(c => got((1, "lines_ca", s"List($c)")) == 1.0))
     assert(got.size == 16)
   }
 
@@ -205,8 +235,8 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
       Zonal.BatchCount("cnt_cb", Seq("cb")),
       Zonal.BatchAverage("avg_cd", Seq(), "cd"),
       Zonal.BatchLines("lines_cb", Seq("cb"))))
-    val rows = df.collect().map(r =>
-      (r.getInt(0), r.getString(1), r.getString(2)) -> r.getDouble(3)).toMap
+    val rows = batchRows(df)
+    assert(nodeNames(df).count(_ == "ZonalPlaneExec") == 1)
     // shape 0 [1,4]×[5,7]: gr 1..2 → cb=1, 6 px, Ints widened to Double
     assert(rows((0, "cnt_cb", "List(1)")) == 6.0)
     // shape 0 avg of cd over its 6 px: gc 1..3 × gr 1..2
@@ -236,21 +266,22 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
     val polygons = cells.map { case (gc, gr) =>
       square(gc + 0.1, gr + 0.1, gc + 0.9, gr + 0.9)
     }
+    // each shape's lines are the streams clipped to it: its own line
     val lines = cells.map { case (gc, gr) =>
-      Seq(gf.createMultiLineString(Array(gf.createLineString(Array(
-        new Coordinate(gc + 0.2, gr + 0.5), new Coordinate(gc + 0.8, gr + 0.5))))))
+      gf.createMultiLineString(Array(gf.createLineString(Array(
+        new Coordinate(gc + 0.2, gr + 0.5), new Coordinate(gc + 0.8, gr + 0.5)))))
     }
-    def skipsAndRows(df: DataFrame) = {
-      val rows = df.collect().map(r =>
-        (r.getInt(0), r.getSeq[Int](1).head) -> r.getLong(2)).toMap
-      (kernelMetric(df, "envelopeSkips"), rows)
-    }
+    val polygonCounts = Zonal.groupedCountMany(spark, layout, Seq(layer("ca")), polygons)
+    val lineCounts = Zonal.multiBatch(spark, layout, Map("ca" -> layer("ca")), polygons, lines,
+      Seq(Zonal.BatchLines("lines_ca", Seq("ca"))))
     Seq(
-      "polygons" -> skipsAndRows(
-        Zonal.groupedCountMany(spark, layout, Seq(layer("ca")), polygons)),
-      "lines" -> skipsAndRows(
-        Zonal.linesJoinMany(spark, layout, Seq(layer("ca")), lines))
-    ).foreach { case (kind, (skips, rows)) =>
+      "polygons" -> (polygonCounts.collect().map(r =>
+        (r.getInt(0), r.getSeq[Int](1).head) -> r.getLong(2)).toMap,
+        kernelMetric(polygonCounts, "envelopeSkips")),
+      "lines" -> (batchRows(lineCounts).map { case ((si, _, k), v) =>
+        (si, k.stripPrefix("List(").stripSuffix(")").toInt) -> v.toLong },
+        kernelMetric(lineCounts, "envelopeSkips"))
+    ).foreach { case (kind, (rows, skips)) =>
       assert(skips == 36, kind)
       // ca = gc (no picked cell hits the (2,2) NODATA hole): shape i
       // masks one cell of value gc
@@ -259,6 +290,25 @@ class ZonalSpec extends AnyFunSuite with SparkSpec {
       }
       assert(rows.values.sum == cells.size, kind)
     }
+  }
+
+  test("multiBatch walks each distinct mask once per (tile, shape), in one pass") {
+    // two ops on the default polygon mask and one on the pixelIsArea
+    // mask: 4×4 cell centers lie in [1.7, 6.2]², 6×6 cells touch it
+    val area = Rasterizer.Options(includePartial = true, pixelIsArea = true)
+    val df = Zonal.multiBatch(spark, layout, Map("ca" -> layer("ca"), "cd" -> layer("cd")),
+      Seq(square(1.7, 1.7, 6.2, 6.2)), Nil, Seq(
+        Zonal.BatchCount("cnt_ca", Seq("ca")),
+        Zonal.BatchAverage("avg_cd", Seq(), "cd"),
+        Zonal.BatchCount("area_ca", Seq("ca"), area)))
+    val rows = batchRows(df)
+    def cells(label: String) = rows.collect { case ((_, `label`, _), v) => v }.sum
+    assert(cells("cnt_ca") == 16 && cells("area_ca") == 36)
+    assert(rows.keys.count(_._2 == "avg_cd") == 1)
+    val names = nodeNames(df)
+    assert(names.count(_ == "ZonalPlaneExec") == 1, names)
+    assert(!names.exists(n => n.contains("Union") || n.contains("InMemoryTableScan")), names)
+    assert(kernelMetric(df, "maskedPixels") == 16 + 36)
   }
 
   test("pixelIsArea widens the mask (reference pixelIsArea=true rasters)") {

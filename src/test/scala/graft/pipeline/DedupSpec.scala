@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Dedup]] and [[Similarity]] screens: hashed word shingles, store
-  * compaction and the semantic dedup screen. (The ngram-pair,
-  * restart-seam and hand-computed overlap cases are still in
-  * Round7Spec, Round13Spec, Round14Spec and Round15Spec.)
+  * compaction, the semantic dedup screen, the hand-computed overlap
+  * cases and the bucket-table merge delta. (The ngram-pair and
+  * restart-seam cases are still in Round13Spec and Round14Spec.)
   */
 class DedupSpec extends AnyFunSuite with SparkSpec {
 
@@ -106,5 +106,66 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val plan = Similarity.semDedupScreen(delta, "vec_id", "embedding",
       storeM, cents).queryExecution.optimizedPlan.toString
     assert(!plan.contains("Window"), "incoming side must be map-only")
+  }
+
+  test("boilerplateCoverage: a shared 2-gram covers both its positions") {
+    import spark.implicits._
+    val df = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
+    val out = Dedup.boilerplateCoverage(df, "doc_id", "text", n = 2, minDf = 2L)
+      .orderBy("doc").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(out.toSeq == Seq((1L, 3L, 2L, 1L), (2L, 3L, 2L, 1L)))
+  }
+
+  test("crossSourceOverlap: one shared 2-gram out of two per source") {
+    import spark.implicits._
+    val df = Seq(("s1", "a b c"), ("s2", "a b d")).toDF("source", "text")
+    val r = Dedup.crossSourceOverlap(df, "source", "text", n = 2)
+      .collect().head
+    assert((r.getAs[String]("src_a"), r.getAs[String]("src_b"),
+      r.getAs[Long]("inter"), r.getAs[Long]("na"), r.getAs[Long]("nb"),
+      r.getAs[Long]("overlap_micro")) == (("s1", "s2", 1L, 2L, 2L, 500000L)))
+  }
+
+  test("weightedJaccardPairs: rare-token weighting separates pairs") {
+    import spark.implicits._
+    // three near-identical docs; w(t) = N − df + 1: shared-everywhere
+    // tokens weigh 1, doc-unique tokens weigh 3
+    val df = Seq((1L, "a b c d e f g h i j"), (2L, "a b c d e f g h i j"),
+      (3L, "a b c d e f g h i zz")).toDF("doc_id", "text")
+    val out = Dedup.weightedJaccardPairs(df, "doc_id", "text", minMicro = 0L)
+      .orderBy("doc_a", "doc_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(4))).toSeq
+    // identical docs MUST collide in every LSH band → wJ = 1
+    assert(out.find(p => p._1 == 1L && p._2 == 2L).exists(_._3 == 1000000L))
+    // the 'zz'-divergent pair: a..i shared by all 3 docs → df 3 → w 1;
+    // j in docs 1,2 → w 2; zz only in 3 → w 3. inter(1,3) = 9,
+    // wsum1 = 11, wsum3 = 12, union = 14 → ⌊9e6/14⌋ = 642857. LSH
+    // candidates are probabilistic, so assert the VALUE only when the
+    // bands surfaced the pair (recall has its own gates: q73/q81/q103)
+    assert(out.find(p => p._1 == 1L && p._2 == 3L).forall(_._3 == 642857L))
+  }
+
+  test("minhashMergeDeltaFromBuckets ≡ minhashMergeDelta (shared bucket table)") {
+    import spark.implicits._
+    val docs = (Seq(
+      (1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "a b c d e f"),
+      (4L, "p q r s t u"), (5L, "zz yy xx ww vv")) ++
+      (10L to 20L).map(i => (i, s"m$i n$i o$i p q r")))
+      .toDF("doc_id", "text")
+    val store = docs.filter(col("doc_id") % 3 =!= 0L)
+    val delta = docs.filter(col("doc_id") % 3 === 0L)
+    val storeBuckets = pipeline.Dedup.minhashBuckets(
+      pipeline.Dedup.minhashSignatures(store, "doc_id", "text", n = 3, numHashes = 12),
+      numHashes = 12, bands = 4)
+    val a = pipeline.Dedup.minhashMergeDelta(storeBuckets, delta, "doc_id", "text",
+      n = 3, numHashes = 12, bands = 4).orderBy("doc").collect().map(_.toSeq).toSeq
+    val dB = pipeline.Dedup.minhashBuckets(
+      pipeline.Dedup.minhashSignatures(delta, "doc_id", "text", n = 3, numHashes = 12),
+      numHashes = 12, bands = 4).localCheckpoint()
+    val b = pipeline.Dedup.minhashMergeDeltaFromBuckets(storeBuckets, dB)
+      .orderBy("doc").collect().map(_.toSeq).toSeq
+    assert(a == b, "verdicts must be a pure function of the bucket rows")
+    assert(a.nonEmpty)
   }
 }

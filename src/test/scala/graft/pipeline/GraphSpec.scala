@@ -4,9 +4,8 @@ package pipeline
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Graph]] operators: hand-computed label propagation, Katz, k-truss
-  * and star-round cases, and the equivalence of the screened and
-  * precomputed-support paths with the plain ones. (The link-prediction
-  * case is still in Round7Spec.)
+  * star-round and link-prediction cases, and the equivalence of the
+  * screened and precomputed-support paths with the plain ones.
   */
 class GraphSpec extends AnyFunSuite with SparkSpec {
 
@@ -205,5 +204,17 @@ class GraphSpec extends AnyFunSuite with SparkSpec {
       .orderBy("round").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq((1L, 4L), (2L, 4L), (3L, 4L), (4L, 4L)))
+  }
+
+  test("linkPrediction: the 4-cycle's two diagonals, hub cap respected") {
+    import spark.implicits._
+    val e = Seq((1L, 2L), (2L, 4L), (4L, 3L), (3L, 1L)).toDF("a", "b")
+    val out = Graph.linkPrediction(e, "a", "b", k = 20, maxDegree = 64L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSeq
+    assert(out == Seq((1L, 4L, 2L, 4L), (2L, 3L, 2L, 4L)))
+    // cap below every degree → no candidates survive
+    assert(Graph.linkPrediction(e, "a", "b", k = 20, maxDegree = 1L)
+      .collect().isEmpty)
   }
 }

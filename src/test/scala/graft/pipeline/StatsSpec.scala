@@ -287,4 +287,54 @@ class StatsSpec extends AnyFunSuite with SparkSpec {
     assert(Stats.ksTwoSample(same, "v", col("is_a"))
       .collect().head.getLong(2) == 0L)
   }
+
+  test("mannWhitneyU: doubled midranks on a tied pooled sample") {
+    import spark.implicits._
+    // A = {1, 3}, B = {2, 3, 5}: U1 = 1.5 (one win + half a tie),
+    // R1 = 1 + 3.5 → r1_twice = 2 + 7 = 9, u1_twice = 9 − 2·3 = 3,
+    // one 2-way tie → tie_cubes = 2³−2 = 6
+    val df = Seq((1L, 1L), (3L, 1L), (2L, 0L), (3L, 0L), (5L, 0L))
+      .toDF("v", "a")
+    val r = Stats.mannWhitneyU(df, "v", col("a") === 1L).collect().head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getLong(4)) == ((2L, 3L, 9L, 3L, 6L)))
+  }
+
+  test("mannKendall: concordant/discordant/tied over one series") {
+    import spark.implicits._
+    // values by day: 1,2,2,1 → C=2, D=2, T=2, S=0
+    val df = Seq(("g", 1, 1L), ("g", 2, 2L), ("g", 3, 2L), ("g", 4, 1L))
+      .toDF("grp", "t", "v")
+    val r = Stats.mannKendall(df, Seq("grp"), "t", "v").collect().head
+    assert((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)) ==
+      ((2L, 2L, 2L, 0L)))
+  }
+
+  test("cramersV: perfect 2x2 association gives V² = 1") {
+    import spark.implicits._
+    val df = Seq(("a", 0L), ("a", 0L), ("b", 1L), ("b", 1L)).toDF("x", "y")
+    val r = Stats.cramersV(df, col("x"), col("y")).collect().head
+    // per-cell χ²·10⁶ = 10⁶ each over the 4-cell grid (zeros included)
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getLong(4)) == ((4L, 2L, 2L, 4000000L, 1000000L)))
+  }
+
+  test("herfindahl: shares 3/4 and 1/4 give HHI = 0.625") {
+    import spark.implicits._
+    val df = Seq(("g", "m1", 3L), ("g", "m2", 1L)).toDF("grp", "m", "cents")
+    val r = Stats.herfindahl(df, Seq("grp"), "m", "cents").collect().head
+    assert((r.getLong(1), r.getLong(2), r.getLong(3)) == ((2L, 4L, 625000L)))
+  }
+
+  test("rollingCorrMoments: window of 2 on a perfectly correlated pair") {
+    import spark.implicits._
+    val df = Seq((1L, 1L, 1L), (2L, 2L, 2L)).toDF("t", "x", "y")
+    val rows = Stats.rollingCorrMoments(df, "t", "x", "y", window = 2)
+      .orderBy("t").collect()
+    assert(rows(0).isNullAt(7)) // single point: den = 0 → NULL
+    val r = rows(1)
+    assert((r.getLong(1), r.getLong(2), r.getLong(4), r.getLong(6)) ==
+      ((2L, 3L, 5L, 5L)))
+    assert(r.getLong(7) == 1000000L) // r² = 1, positive
+  }
 }

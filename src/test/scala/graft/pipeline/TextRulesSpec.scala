@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Specs for the round-4 text scoring operators: TF-IDF top terms and
@@ -73,5 +74,24 @@ class TextRulesSpec extends AnyFunSuite with SparkSpec {
     assert(m3.getInt(1) == (if (m3.getDouble(0) >= 3.0 && m3.getDouble(0) <= 10.0) 1 else 0))
     assert(got(4L)._3 == 0 && got(4L)._5 == 0)              // alpha fails -> keep 0
     assert(got(5L) == ((1, 1, 1, 0, 0)))                    // stopwords fail
+  }
+
+  test("cohensKappa: 4/6 agreement with symmetric marginals gives 1/3") {
+    import spark.implicits._
+    val df = Seq(("x", "x"), ("x", "x"), ("x", "y"), ("y", "x"), ("y", "y"),
+      ("y", "y")).toDF("a", "b")
+    val r = TextAnalysis.cohensKappa(df, col("a"), col("b")).collect().head
+    // κ = (6·4 − 18)/(36 − 18) = 1/3 → 333333 floored micros
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
+      ((6L, 4L, 18L, 333333L)))
+  }
+
+  test("bpePairStats: corpus-weighted adjacent char pairs") {
+    import spark.implicits._
+    // words: ab×2, abc×1 → 'ab' count 3, 'bc' count 1
+    val df = Seq("ab ab abc").toDF("text")
+    val out = TextAnalysis.bpePairStats(df, "text", k = 20).collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(out == Seq(("ab", 3L), ("bc", 1L)))
   }
 }
