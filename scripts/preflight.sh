@@ -9,7 +9,7 @@
 #   r6:    a filtered Bench run clobbered the canonical BENCH_FULL.json
 #                              -> bench_clobber_check.sh
 # plus the always-on gates: full Verify vs DuckDB oracles, unit specs,
-# and the structural plan assertions for the candidate-volume queries.
+# and the plan census (PlanCheck --census) over every gate.
 # pipefail: a failing step piped into `tail` must still fail the script.
 set -eo pipefail
 cd "$(dirname "$0")/.."
@@ -31,9 +31,12 @@ python3 scripts/time_oracles.py "$SF" "$OUT" 20 | tail -1
 echo "== 4/6 libm boundary perturbation audit"
 python3 scripts/audit_libm_boundary.py "$SF" "$OUT" | tail -1
 
-echo "== 5/6 plan assertions (no cartesians in candidate-volume queries)"
-sbt -batch "runMain graft.PlanCheck --assert" 2>/dev/null | grep "PLAN" || {
-  sbt -batch "runMain graft.PlanCheck --assert" 2>&1 | grep "PLAN"; exit 1; }
+echo "== 5/6 plan census at $SF (every gate, synthetic plan and pin)"
+census=$(mktemp)
+if ! SPARK_GRAFT_SF_DIR="$SF" sbt -batch "runMain graft.PlanCheck --census" >"$census" 2>&1; then
+  grep -E "^CENSUS (FAIL|STALE|ERR)" "$census" || tail -20 "$census"; exit 1; fi
+echo "$(grep -c "^CENSUS" "$census") census rows, none bad"
+rm -f "$census"
 
 echo "== 6/6 unit specs"
 sbt -batch test 2>&1 | tail -2

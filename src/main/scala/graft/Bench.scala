@@ -50,17 +50,16 @@ object Bench {
     (r.totalMemory() - r.freeMemory()) / (1024 * 1024)
   }
 
-  /** Bytes currently under the Spark scratch root (shuffle files,
+  /** Bytes currently under the Spark scratch root
+    * ([[GraftSession.scratchDir]]: shuffle files,
     * DISK_ONLY blocks, state stores) — on the tmpfs redirect this is
     * RAM, so growth across the suite is memory pressure. Walk is
     * bounded by the cleaner keeping the dir small between queries;
     * failures (files vanishing mid-walk) report -1.
     */
   private def scratchMb(spark: SparkSession): Long = {
-    val dir = spark.conf.getOption("spark.local.dir")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
     try {
-      val p = java.nio.file.Paths.get(dir)
+      val p = java.nio.file.Paths.get(GraftSession.scratchDir(spark))
       if (!java.nio.file.Files.isDirectory(p)) -1L
       else {
         val s = java.nio.file.Files.walk(p)

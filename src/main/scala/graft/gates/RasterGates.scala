@@ -123,12 +123,15 @@ private[graft] object RasterGates extends GateFamily {
 
   /** The /multi batch (reference flagship: 61 HUC-12s × 7 ops in one
     * call with a shared scan — CHANGELOG.md:82-91 "almost an order of
-    * magnitude" over per-shape runs). 32 shapes × 3 ops, one plan.
+    * magnitude" over per-shape runs). An `nx`×`ny` grid of shapes (32
+    * by default) × 4 ops, one plan; PlanCheck varies the grid to show
+    * the plan does not grow with the shape count.
     */
-  private def qZonalMulti(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def qZonalMulti(s: SparkSession, dir: String,
+                                 nx: Int = 8, ny: Int = 4): DataFrame = {
     import graft.operators.Zonal
     val (path, spec, metas) = zonalCtx(s, dir)
-    val shapes = graft.sources.ZonalFixture.subShapes(spec)
+    val shapes = graft.sources.ZonalFixture.subShapes(spec, nx, ny)
     val union = graft.geom.GeomOps.unionAll(shapes)
     val shared = Seq("nlcd", "soil", "slope").map(id =>
       id -> zonalLayers(s, path, metas, Seq(id), union).head).toMap
@@ -145,16 +148,17 @@ private[graft] object RasterGates extends GateFamily {
     // flips with FP summation order on either side. avg * count * 100
     // undoes the division — it equals the non-NaN cents sum to ~1e-5,
     // which ROUND recovers exactly and order-independently; the count
-    // comes from the engine's own cnt_soil rows (themselves gated).
-    val cnts = raw.filter(col("op_label") === "cnt_soil")
-      .select(col("shape_id").as("c_sid"), col("k").as("c_k"), col("v").as("c_n"))
-    val avgCents = raw.filter(col("op_label") === "avg_slope")
-      .join(cnts, col("shape_id") === col("c_sid") && col("k") === col("c_k"))
+    // c_n comes from the engine's own cnt_soil row of the same shape
+    // and soil class (itself gated), read by a window over the one
+    // pass, and an average without one is dropped.
+    val cN = max(when(col("op_label") === "cnt_soil", col("v")))
+      .over(org.apache.spark.sql.expressions.Window.partitionBy("shape_id", "k"))
+    val avg = col("op_label") === "avg_slope"
+    raw.withColumn("c_n", cN)
+      .filter(!avg || col("c_n").isNotNull)
       .select(col("shape_id"), col("op_label"), col("k"),
-        round(col("v") * col("c_n") * 100).as("v"))
-    raw.filter(col("op_label") =!= "avg_slope")
-      .select(col("shape_id"), col("op_label"), col("k"), round(col("v"), 6).as("v"))
-      .union(avgCents)
+        when(avg, round(col("v") * col("c_n") * 100))
+          .otherwise(round(col("v"), 6)).as("v"))
       .orderBy("shape_id", "op_label", "k")
   }
   // reads the per-pixel value planes (ZonalFixture.writePlane), not

@@ -752,7 +752,7 @@ private[graft] object SimilarityGates extends GateFamily {
     // ds -> aggregate(zip_with(qs, ds, x*y), 0L, a+x)))), 0L, a+x)`
     // ran interpreted lambdas allocating a boxed array per (qs, ds)
     // pair per candidate row; the kernel is the identical integer
-    // fold (spec-pinned in Round14Spec) in a primitive loop
+    // fold (spec-pinned in LongKernelsSpec) in a primitive loop
     val scored = c.crossJoin(broadcast(q))
       .withColumn("score", call_function("graft_maxsim_long", col("qv"), col("dv")))
     val w = Window.partitionBy(col("query_id"))

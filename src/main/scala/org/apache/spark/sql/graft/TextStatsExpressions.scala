@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * primitive open-addressing scratch tables.
   *
   * Value identity with the SQL chains they replace (spec-pinned in
-  * Round14Spec):
+  * TextKernelsSpec):
   *  - tokens are the segments of a SINGLE-SPACE split with empties
   *    kept (Spark's `split(text, ' ')` with the default limit -1) —
   *    0x20 never occurs inside a multi-byte UTF-8 sequence, so byte

@@ -321,7 +321,7 @@ case class SelfDotLong(child: Expression)
   * dot is null and is SKIPPED by array_max when other dots exist;
   * long arithmetic is ANSI-exact (the session runs ansi=true, where
   * the chain throws on overflow — round 15 made the kernel match).
-  * Spec-pinned in Round14Spec against the verbatim higher-order form.
+  * Spec-pinned in LongKernelsSpec against the verbatim higher-order form.
   */
 case class MaxSimLong(left: Expression, right: Expression)
   extends BinaryExpression with ExpectsInputTypes {

@@ -8,7 +8,7 @@ import graft.SparkSpec
 
 /** The long-integer fold kernels `graft_dot_long`, `graft_l2sq_long`
   * and `graft_selfdot_long` that `DotProductRewriteRule` installs for
-  * the dot / L2² / self-dot spellings.
+  * the dot / L2² / self-dot spellings, and `graft_maxsim_long`.
   */
 class LongKernelsSpec extends AnyFunSuite with SparkSpec {
 
@@ -135,5 +135,42 @@ class LongKernelsSpec extends AnyFunSuite with SparkSpec {
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
       .toMap
     assert(codegen == interp)
+  }
+
+  test("graft_maxsim_long == the nested higher-order MaxSim chain") {
+    import spark.implicits._
+    // adversarial grid: normal 8x8, ragged subvector lengths, nulls in
+    // subvectors, null subvectors, empty dv, empty qv — plus a random
+    // block large enough to run on executors
+    val rnd = new scala.util.Random(42)
+    def vec(n: Int): Seq[java.lang.Long] =
+      Seq.fill(n)(java.lang.Long.valueOf(rnd.nextInt(2001) - 1000L))
+    val rows: Seq[(Long, Seq[Seq[java.lang.Long]], Seq[Seq[java.lang.Long]])] =
+      (0 until 200).map { i =>
+        (i.toLong, Seq.fill(4)(vec(8)), Seq.fill(4)(vec(8)))
+      } ++ Seq(
+        (1000L, Seq(vec(8), vec(3)), Seq(vec(8), vec(8))), // ragged q
+        (1001L, Seq(vec(8)), Seq(vec(3), vec(8))), // ragged d: mismatch skipped by max
+        (1002L, Seq(vec(8)), Seq(vec(3), vec(5))), // all dots null -> null
+        (1003L, Seq(Seq[java.lang.Long](1L, null, 3L)), Seq(vec(3))), // null elem
+        (1004L, Seq(vec(8), null), Seq(vec(8))), // null qs -> null
+        (1005L, Seq(vec(8)), Seq.empty), // empty dv -> null
+        (1006L, Seq.empty, Seq(vec(8))), // empty qv -> 0
+      )
+    val df = rows.toDF("id", "qv", "dv").repartition(5)
+    val hof =
+      """aggregate(
+        |  transform(qv, qs ->
+        |    array_max(transform(dv, ds ->
+        |      aggregate(zip_with(qs, ds, (x, y) -> x * y),
+        |                0L, (a, x) -> a + x)))),
+        |  0L, (a, x) -> a + x)""".stripMargin
+    val got = df.select(col("id"),
+      call_function("graft_maxsim_long", col("qv"), col("dv")).as("s"))
+      .orderBy("id").collect().toSeq.map(_.toSeq)
+    val want = df.select(col("id"), expr(hof).as("s"))
+      .orderBy("id").collect().toSeq.map(_.toSeq)
+    assert(got == want)
+    assert(want.takeRight(5).map(_(1)) == Seq(null, null, null, null, 0L))
   }
 }

@@ -4,8 +4,8 @@ package sources
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[EdgePlane]]: the materialized edge sets equal the inline builds
-  * they replaced, and the cache fingerprint follows the input content.
-  * (The missing-table fingerprint test is still in Round13Spec.)
+  * they replaced, and the cache fingerprint follows the input content
+  * and fails loudly on a missing table.
   */
 class EdgePlaneSpec extends AnyFunSuite with SparkSpec {
 
@@ -51,5 +51,21 @@ class EdgePlaneSpec extends AnyFunSuite with SparkSpec {
     mk(root1, Array[Byte](1, 2, 3, 4))
     val fp1c = sources.EdgePlane.fingerprint(root1.getPath, Seq("lineitem.parquet"))
     assert(fp1 != fp1c)
+  }
+
+  test("EdgePlane fingerprint fails loudly on a missing table") {
+    val root = java.nio.file.Files.createTempDirectory("graft_fp_missing").toFile
+    val e = intercept[IllegalArgumentException] {
+      EdgePlane.fingerprint(root.getPath, Seq("nope.parquet"))
+    }
+    assert(e.getMessage.contains("nope.parquet"))
+    // nested partition dirs contribute (recursive walk)
+    val sub = new java.io.File(root, "t.parquet/part=0")
+    assert(sub.mkdirs())
+    java.nio.file.Files.write(new java.io.File(sub, "f1").toPath, Array[Byte](1))
+    val fp1 = EdgePlane.fingerprint(root.getPath, Seq("t.parquet"))
+    java.nio.file.Files.write(new java.io.File(sub, "f2").toPath, Array[Byte](2))
+    val fp2 = EdgePlane.fingerprint(root.getPath, Seq("t.parquet"))
+    assert(fp1 != fp2, "a new nested file must change the fingerprint")
   }
 }
