@@ -66,70 +66,4 @@ class ExactPercentilesSpec extends AnyFunSuite with SparkSpec {
       ("dup", java.lang.Double.valueOf(7.0)), ("two", java.lang.Double.valueOf(1.0)),
       ("two", java.lang.Double.valueOf(2.0))))
   }
-
-  test("ExactPercentiles: ranged path is bit-identical to the window path") {
-    import spark.implicits._
-    // deterministic values with heavy ties, NULLs, a hot group, a
-    // single-row group, and an all-NULL group
-    val rows = (0 until 5000).map { i =>
-      val g = if (i % 10 == 0) "cold" else "hot" // 90% of rows in one group
-      val v: java.lang.Double =
-        if (i % 37 == 0) null
-        else math.floor((i * 2654435761L % 997).toDouble / 3.0)
-      (g, v)
-    } ++ Seq(("solo", java.lang.Double.valueOf(42.0)),
-      ("allnull", null.asInstanceOf[java.lang.Double]),
-      ("allnull", null.asInstanceOf[java.lang.Double]))
-    val df = rows.toDF("g", "v").repartition(7)
-    val win = ExactPercentiles.exact(df, Seq("g"), "v", ps,
-      maxGroupRows = Long.MaxValue).orderBy("g").collect().toSeq.map(_.toSeq)
-    assert(ExactPercentiles.lastPath == "window-small")
-    val ranged = ExactPercentiles.exact(df, Seq("g"), "v", ps,
-      maxGroupRows = 1).orderBy("g").collect().toSeq.map(_.toSeq)
-    assert(ExactPercentiles.lastPath == "ranged",
-      "maxGroupRows=1 must drive the probe to the ranged path")
-    assert(ranged == win, "ranged and window percentiles must be bit-identical")
-    assert(win.size == 4) // hot, cold, solo, allnull all present
-    val allnull = win.find(_.head == "allnull").get
-    assert(allnull.tail.forall(_ == null), "all-NULL group keeps NULL percentiles")
-    // and against Spark's own percentile (the bit-identity contract),
-    // non-null groups only (built-in emits no row for them here)
-    assert(win.filter(_.head != "allnull") ==
-      builtin(df.filter(col("v").isNotNull)).orderBy("g").collect().toSeq.map(_.toSeq))
-  }
-
-  test("ExactPercentiles: probe fires only above the bound; hot group switches") {
-    import spark.implicits._
-    val df = (0 until 1000).map(i => ("g", i.toDouble)).toDF("g", "v")
-    // bound above the group size: probe resolves back to the window path
-    ExactPercentiles.exact(df, Seq("g"), "v", Seq("p50" -> 0.5),
-      maxGroupRows = 2000).collect(): Unit
-    assert(Set("window-small", "window-probed").contains(ExactPercentiles.lastPath))
-    // bound below: ranged
-    ExactPercentiles.exact(df, Seq("g"), "v", Seq("p50" -> 0.5),
-      maxGroupRows = 999).collect(): Unit
-    assert(ExactPercentiles.lastPath == "ranged")
-  }
-
-  test("ranged percentiles: boundary collect stays within the 2P-2 bound") {
-    // 2000 groups over 1M rows with one hot group (40% of rows): many
-    // groups must NOT inflate the boundary collect — only partition-
-    // boundary-straddling groups ship offsets
-    val df = spark.range(0, 1000000).select(
-      when(col("id") % 5 < 2, lit(0L)).otherwise(pmod(col("id"), lit(2000L)))
-        .as("g"),
-      (col("id") * 2654435761L % 100003L).cast("double").as("v"))
-    val expectGroups = df.select("g").distinct().count()
-    val out = ExactPercentiles.exact(df.toDF(), Seq("g"), "v",
-      Seq("p50" -> 0.5), maxGroupRows = 1).collect()
-    assert(ExactPercentiles.lastPath == "ranged")
-    assert(out.length == expectGroups)
-    assert(expectGroups > 1000, "the many-group premise must hold")
-    val p = spark.sessionState.conf.numShufflePartitions
-    val collected = ExactPercentiles.lastBoundaryRows
-    assert(collected >= 0)
-    assert(collected <= 2L * p - 2,
-      s"boundary collect must be <= 2P-2 = ${2 * p - 2} rows, got $collected " +
-        "(contiguous range partitions: each boundary straddled by <= 1 group)")
-  }
 }

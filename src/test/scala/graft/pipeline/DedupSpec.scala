@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Dedup]] and [[Similarity]] screens: hashed word shingles, store
   * compaction, the semantic dedup screen, the hand-computed overlap
-  * cases, the bucket-table merge delta and its restart seam, and the
-  * n-gram pair self-join (its join shape and a hot shingle's bucket).
+  * cases and the bucket-table merge delta. (The ngram-pair and
+  * restart-seam cases are still in Round13Spec and Round14Spec.)
   */
 class DedupSpec extends AnyFunSuite with SparkSpec {
 
@@ -169,34 +169,6 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(a.nonEmpty)
   }
 
-  test("ngramJaccardPairs: pair generation is a reused-exchange sort-merge self-join") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "a b c d e f g h"),
-      (2L, "a b c d e f g x"),
-      (3L, "a b c d e f g h"), // exact dup of 1
-      (4L, "z y x w v u t s")
-    ).toDF("doc_id", "text")
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 3, minJaccard = 0.5)
-    val plan = pairs.queryExecution.executedPlan.toString
-    // the join NODE keyed on the shingle hash must be the sort-merge —
-    // the earlier `contains("SortMergeJoin")` alone could be satisfied
-    // by some other join while the pair join silently broadcast
-    assert(plan.linesIterator.exists(l =>
-        l.contains("SortMergeJoin") && l.contains("[h#")),
-      "pair generation must be a sort-merge join on the shingle hash " +
-        "(spills, never hot-bucket arrays)")
-    assert(!plan.linesIterator.exists(l =>
-        l.contains("BroadcastHashJoin") && l.contains("[h#")),
-      "pair join on the shingle hash must never be a broadcast")
-    val got = pairs.orderBy("doc_a", "doc_b").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    // docs 1/3 identical (J=1.0); 1-2 and 2-3 share 5 of 7 shingles
-    // (J = 5/(6+6-5) = 0.7143); doc 4 disjoint
-    assert(got == Seq((1L, 2L, 0.7143), (1L, 3L, 1.0), (2L, 3L, 0.7143)))
-  }
-
   test("store compaction slices overlap: %101 re-crawl crosses %4 segments") {
     // with %100 (divisible by 4) the re-crawl slice was a SUBSET of
     // the %4 slice and no doc ever appeared in two segments — the
@@ -206,78 +178,5 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       segs.size > 1
     }
     assert(inTwo > 0, "some docs must land in two segments")
-  }
-
-  test("restart pin: a parquet round-trip through a FRESH session screens identically") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta"),
-      (2L, "alpha beta gamma delta epsilon zeta eta"), // dup of 1
-      (10L, "alpha beta gamma delta epsilon zeta eta"), // delta dup of store
-      (20L, "one two three four five six seven"),
-      (30L, "one two three four five six seven"), // delta dup of delta 20
-      (40L, "totally novel content nothing shared here")
-    ).toDF("doc_id", "text")
-    val store = docs.filter(col("doc_id") < 10)
-    val delta = docs.filter(col("doc_id") >= 10)
-    val dir = java.nio.file.Files.createTempDirectory("graft_restart").toFile
-    try {
-      val buckets = Dedup.minhashBuckets(
-        Dedup.minhashSignatures(store, "doc_id", "text", n = 3, numHashes = 12),
-        numHashes = 12, bands = 4)
-      buckets.write.mode("overwrite").parquet(s"$dir/store")
-      // single-session verdicts (no round-trip)
-      val direct = Dedup.minhashMergeDelta(buckets, delta, "doc_id", "text",
-        n = 3, numHashes = 12, bands = 4).orderBy("doc").collect().toSeq
-      // fresh session: only the parquet bytes cross the seam
-      val s2 = spark.newSession()
-      val rt = Dedup.minhashMergeDelta(
-        s2.read.parquet(s"$dir/store"),
-        s2.createDataFrame(java.util.Arrays.asList(delta.collect(): _*),
-          delta.schema),
-        "doc_id", "text", n = 3, numHashes = 12, bands = 4)
-        .orderBy("doc").collect().toSeq
-      assert(rt == direct, "round-tripped store must screen identically")
-      val kept = direct.filter(_.getAs[Boolean]("kept")).map(_.getLong(0))
-      assert(kept.contains(40L) && !kept.contains(10L) && !kept.contains(30L))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(dir)
-    }
-  }
-
-  // 3 organic near-dup docs plus 6 docs sharing ONE boilerplate
-  // 3-gram ("x y z" embedded in otherwise-disjoint text): the
-  // boilerplate shingle has df=6, everything else df≤3
-  private def corpus = {
-    import spark.implicits._
-    (Seq(
-      (1L, "a b c d e f"),
-      (2L, "a b c d e g"),
-      (3L, "a b c d e f")) ++
-      (10L to 15L).map(i => (i, s"u$i v$i x y z w$i"))).toDF("doc_id", "text")
-  }
-
-  test("ngramJaccardPairs: a hot shingle's bucket yields every pair at its exact score") {
-    val got = Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
-      n = 3, minJaccard = 0.0).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    // the 6-doc boilerplate bucket owes C(6,2) = 15 pair rows: docs
-    // 10..15 share nothing but "x y z"
-    val boilerPairs = got.keys.filter { case (a, b) => a >= 10L && b >= 10L }
-    assert(boilerPairs.size == 15)
-    // exact Jaccard computed locally over the 3-gram sets, rounded like the op
-    val shingles = corpus.collect().map { r =>
-      r.getLong(0) -> r.getString(1).split(' ').sliding(3).map(_.mkString(" ")).toSet
-    }.toMap
-    val want = (for {
-      (a, sa) <- shingles; (b, sb) <- shingles
-      if a < b && (sa & sb).nonEmpty
-    } yield (a, b) -> BigDecimal((sa & sb).size.toDouble / (sa | sb).size)
-      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
-    assert(got == want)
   }
 }

@@ -68,31 +68,4 @@ class SortedIntersectSpec extends AnyFunSuite with SparkSpec {
       ArrayFunctions.sortedIntersectSize(col("ja"), col("jb")).as("fast")).head
     assert(r.getLong(0) == 1L) // only "b"; the null pair does not count
   }
-
-  test("q169 identity: hashed-token inter/uni equal string-token inter/uni") {
-    import spark.implicits._
-    // adversarial: shared tokens, distinct counts, duplicate tokens
-    val docs = Seq(
-      (1L, "the cat sat on the mat"),
-      (2L, "the cat sat on a mat"),
-      (3L, "completely different words here"),
-      (4L, "the the the cat cat mat")
-    ).toDF("doc_id", "text")
-    val hashed = docs.select(col("doc_id"),
-      expr("array_sort(array_distinct(transform(split(text, ' '), t -> xxhash64(t))))").as("h"),
-      expr("array_sort(array_distinct(split(text, ' ')))").as("s"))
-    val pairs = hashed.as("a").join(hashed.as("b"),
-        col("a.doc_id") < col("b.doc_id"))
-      .select(
-        ArrayFunctions.sortedIntersectSizeLong(col("a.h"), col("b.h")).as("ih"),
-        ArrayFunctions.sortedIntersectSize(col("a.s"), col("b.s")).as("is"),
-        (size(col("a.h")) === size(col("a.s"))).as("na_eq"),
-        (size(col("b.h")) === size(col("b.s"))).as("nb_eq"))
-      .collect()
-    assert(pairs.nonEmpty)
-    pairs.foreach { r =>
-      assert(r.getLong(0) == r.getLong(1), "hashed intersect == string intersect")
-      assert(r.getBoolean(2) && r.getBoolean(3), "hashed sizes == string sizes")
-    }
-  }
 }
